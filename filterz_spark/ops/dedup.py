@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..spark import manifest
 from ..spark.partitioning import ensure_parallelism
 
 
@@ -162,12 +163,23 @@ def minhash_signature_arrays(docs: DataFrame, num_hashes: int = 8,
 # persisted pre-flip store. The marker lives in an underscore-prefixed
 # subdirectory: Spark's parquet reader ignores `_`-prefixed paths (the
 # `_SUCCESS` convention), so `spark.read.parquet(path)` on the store is
-# unaffected, and writing the marker THROUGH Spark keeps the store
-# portable to any Spark-writable filesystem (HDFS/S3), unlike a
-# driver-local ``open()`` sidecar.
+# unaffected. Marker IO goes through ``spark.manifest`` (Hadoop FS, any
+# filesystem, no Spark job).
 SIGSTORE_META_DIR = "_filterz_signature_meta"
-SIGSTORE_META_SCHEMA = ("hash_family string, num_hashes int, k int, "
-                        "version int")
+
+
+def _sig_meta(path: str, **want) -> dict | None:
+    """The store's marker (None if unmarked), refused on any mismatch."""
+    m = manifest.read(f"{path.rstrip('/')}/{SIGSTORE_META_DIR}")
+    if m is not None:
+        manifest.check(
+            "signature store", path, m,
+            "signatures of different families or shapes never collide "
+            "(or misalign band positions), so joining or appending would "
+            "silently stop deduplicating. Pin the store's parameters and "
+            "re-derive new signatures under them, or use a fresh store.",
+            **want)
+    return m
 
 
 def write_signature_store(sig_arr: DataFrame, path: str, *,
@@ -176,67 +188,40 @@ def write_signature_store(sig_arr: DataFrame, path: str, *,
     """Persist an array-form signature table (as produced by
     ``minhash_signature_arrays``) WITH its family marker.
 
-    ``mode="append"`` validates the existing marker first (family AND
-    signature shape must match — appending 16-hash signatures to an
-    8-hash store corrupts every downstream band position); any other
-    mode (over)writes marker and data together. Appending to a
-    pre-existing UNMARKED store raises: its family is unknown (written
-    before this helper, or by foreign code) — stamp it explicitly with
-    ``stamp_signature_store`` after verifying what produced it.
+    ``mode`` is a Spark save mode, applied to the store before its marker
+    is written; the data then always appends, so a data write that crashed
+    leaves a marked store the retry accepts. An existing marker is
+    validated first (family AND signature shape must match — appending
+    16-hash signatures to an 8-hash store corrupts every downstream band
+    position). Writing into a pre-existing UNMARKED store raises: its
+    family is unknown (written before this helper, or by foreign code) —
+    stamp it explicitly with ``stamp_signature_store`` after verifying
+    what produced it.
     """
-    spark = sig_arr.sparkSession
-    meta_path = f"{path.rstrip('/')}/{SIGSTORE_META_DIR}"
-    if mode == "append":
-        try:
-            existing = spark.read.schema(SIGSTORE_META_SCHEMA) \
-                .json(meta_path).collect()
-        except Exception:
-            existing = None
-        if existing:
-            m = existing[0]
-            if (m["hash_family"], m["num_hashes"], m["k"]) != \
-                    (hash_family, num_hashes, k):
-                raise RuntimeError(
-                    f"signature store at {path} was written with "
-                    f"hash_family={m['hash_family']!r}, num_hashes="
-                    f"{m['num_hashes']}, k={m['k']} but this append is "
-                    f"({hash_family!r}, {num_hashes}, {k}): mixed "
-                    "families/shapes never collide with each other, so "
-                    "the store would silently stop deduplicating. Pin "
-                    "the store's parameters, or write a fresh store.")
-        else:
-            # does DATA already exist without a marker?
-            try:
-                spark.read.parquet(path).schema
-                has_data = True
-            except Exception:
-                has_data = False
-            if has_data:
-                raise RuntimeError(
-                    f"signature store at {path} has data but no "
-                    f"{SIGSTORE_META_DIR} marker: its hash family is "
-                    "unknown (pre-marker store or foreign directory). "
-                    "Verify what produced it and stamp it with "
-                    "stamp_signature_store, or point at a fresh path.")
-    sig_arr.write.mode(mode).parquet(path)
-    stamp_signature_store(spark, path, hash_family=hash_family,
-                          num_hashes=num_hashes, k=k)
+    if not manifest.claim("signature store", path, mode):
+        return
+    if _sig_meta(path, hash_family=hash_family, num_hashes=num_hashes,
+                 k=k) is None:
+        if manifest.names(path):
+            raise manifest.refuse(
+                "signature store", path,
+                "its hash family is unknown (pre-marker store or foreign "
+                "directory). Verify what produced it and stamp it with "
+                "stamp_signature_store, or point at a fresh path.",
+                missing=SIGSTORE_META_DIR)
+        stamp_signature_store(sig_arr.sparkSession, path,
+                              hash_family=hash_family,
+                              num_hashes=num_hashes, k=k)
+    sig_arr.write.mode("append").parquet(path)
 
 
 def stamp_signature_store(spark, path: str, *, hash_family: str,
                           num_hashes: int, k: int) -> None:
     """(Re)write the family marker of a signature store — for adopting a
     store written before markers existed, AFTER verifying its lineage."""
-    # driver-side Hadoop FS write (see spark.fsio): the 1-row Spark job
-    # this replaces cost ~4.5 s per stamp; the directory stays readable by
-    # the unchanged spark.read.json reader
-    import json as _json
-
-    from ..spark.fsio import overwrite_json_marker
-    meta_path = f"{path.rstrip('/')}/{SIGSTORE_META_DIR}"
-    overwrite_json_marker(spark, meta_path, _json.dumps({
+    manifest.write(f"{path.rstrip('/')}/{SIGSTORE_META_DIR}/marker.json", {
         "hash_family": hash_family, "num_hashes": num_hashes, "k": k,
-        "version": 1}))
+        "version": 1})
 
 
 def read_signature_store(spark, path: str, *, hash_family: str,
@@ -244,38 +229,16 @@ def read_signature_store(spark, path: str, *, hash_family: str,
                          k: int | None = None) -> DataFrame:
     """Open a family-pinned signature store, validating the marker against
     what the caller is about to join it with. A store without a marker is
-    refused loudly (unknown family — never guess), same contract as the
-    streaming store's meta.json."""
-    meta_path = f"{path.rstrip('/')}/{SIGSTORE_META_DIR}"
-    try:
-        rows = spark.read.schema(SIGSTORE_META_SCHEMA).json(meta_path) \
-            .collect()
-    except Exception:
-        rows = []
-    if not rows:
-        raise RuntimeError(
-            f"signature store at {path} has no {SIGSTORE_META_DIR} marker: "
+    refused loudly (unknown family — never guess); every store refuses a
+    missing manifest the same way (``spark.manifest.refuse``)."""
+    if _sig_meta(path, hash_family=hash_family, num_hashes=num_hashes,
+                 k=k) is None:
+        raise manifest.refuse(
+            "signature store", path,
             "its hash family is unknown, and joining signatures across "
             "families silently disables dedup (their values never "
             "collide). If the store's lineage is known, stamp it with "
-            "stamp_signature_store first.")
-    m = rows[0]
-    if m["hash_family"] != hash_family:
-        raise RuntimeError(
-            f"signature store at {path} was written with hash_family="
-            f"{m['hash_family']!r} but the caller expects {hash_family!r}: "
-            "signatures from different families never collide, so the "
-            f"join would match nothing. Pin hash_family="
-            f"{m['hash_family']!r} (and re-derive new signatures under "
-            "it), or rebuild the store.")
-    for name, want, got in (("num_hashes", num_hashes, m["num_hashes"]),
-                            ("k", k, m["k"])):
-        if want is not None and want != got:
-            raise RuntimeError(
-                f"signature store at {path} was written with {name}={got} "
-                f"but the caller expects {name}={want}: band positions "
-                "would misalign. Re-derive with the store's parameters "
-                "or rebuild the store.")
+            "stamp_signature_store first.", missing=SIGSTORE_META_DIR)
     return spark.read.parquet(path)
 
 
@@ -711,9 +674,10 @@ def duplicate_spans(docs: DataFrame, window: int = 16,
       map task, and the per-doc answer is
       ``n_dup = n_spans - owned_instances`` — an equi-join of two
       doc-keyed count tables, never a per-instance join back. No stage
-      anywhere receives all copies of a hot key on one task (the
-      map-side exchange is computed once and reused by both aggregation
-      branches — ReusedExchange in the plan).
+      anywhere receives all copies of a hot key on one task. The static
+      plan has five hash exchanges and no ReusedExchange; reusing the
+      map-side exchange across both aggregation branches is at most an
+      AQE runtime decision.
     - ``"window"``: the round-6 single-shuffle analytic window
       (min over ``Window.partitionBy(fp)``). One shuffle fewer for
       skew-free corpora, but a window partition cannot be pre-aggregated

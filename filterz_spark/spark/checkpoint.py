@@ -23,31 +23,22 @@ Parquet stands in for Iceberg here (sandbox has no catalog); the layout maps
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
+from . import manifest
 from .build import INDEX_SCHEMA, build_filter_index
-
-_LINEAGE_FILE = "_lineage.json"
-_STATE_DIR = "state"
 
 
 def _lineage_path(checkpoint_dir: str) -> str:
-    return os.path.join(checkpoint_dir, _LINEAGE_FILE)
+    return f"{checkpoint_dir.rstrip('/')}/_lineage.json"
 
 
 def _state_path(checkpoint_dir: str) -> str:
-    return os.path.join(checkpoint_dir, _STATE_DIR)
+    return f"{checkpoint_dir.rstrip('/')}/state"
 
 
 def read_lineage(checkpoint_dir: str) -> dict | None:
-    p = _lineage_path(checkpoint_dir)
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return json.load(f)
+    return manifest.read(_lineage_path(checkpoint_dir))
 
 
 def checkpointed_build(spark: SparkSession, df: DataFrame, key_col: str,
@@ -61,7 +52,6 @@ def checkpointed_build(spark: SparkSession, df: DataFrame, key_col: str,
     invocation (simulates a mid-build crash; a subsequent call resumes).
     """
     params = params or {}
-    os.makedirs(checkpoint_dir, exist_ok=True)
     lineage = read_lineage(checkpoint_dir)
     expected = {
         "kind": kind,
@@ -70,11 +60,10 @@ def checkpointed_build(spark: SparkSession, df: DataFrame, key_col: str,
         "num_partitions": num_partitions,
     }
     if lineage is not None:
-        if {k: lineage[k] for k in expected} != expected:
-            raise ValueError(
-                f"checkpoint at {checkpoint_dir} was built with different "
-                f"parameters: {lineage} vs {expected}"
-            )
+        manifest.check("checkpoint", checkpoint_dir, lineage,
+                       "different parameters. Resume with the checkpoint's "
+                       "parameters, or point at a fresh directory.",
+                       **expected)
         done = frozenset(lineage["completed_partitions"])
         lineage.setdefault("snapshots", [])
     else:
@@ -138,11 +127,10 @@ def checkpointed_build(spark: SparkSession, df: DataFrame, key_col: str,
             "mem_usage": int(stats["mem"]) if stats else 0,
             "wall_s": build_wall,
         })
-        with open(_lineage_path(checkpoint_dir), "w") as f:
-            json.dump(lineage, f)
+        manifest.write(_lineage_path(checkpoint_dir), lineage)
 
     state = _state_path(checkpoint_dir)
-    if not os.path.exists(state):  # every partition was empty: empty index
+    if not manifest.exists(state):  # every partition was empty: empty index
         return spark.createDataFrame([], schema=INDEX_SCHEMA)
     full = spark.read.parquet(state)
     # keep one row per partition shard (re-runs may append duplicates;

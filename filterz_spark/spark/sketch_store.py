@@ -32,11 +32,10 @@ import json
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..sketches import SKETCH_KINDS, MergeableSketch
+from . import manifest
 from .merge import STATE_SCHEMA, _merge_group, partial_states, tree_merge
 
 SKETCHSTORE_META_DIR = "_filterz_sketch_meta"
-SKETCHSTORE_META_SCHEMA = ("kind string, params string, value_kind string, "
-                           "version int")
 # store rows add the epoch partition column to the merge-state schema
 STORE_SCHEMA = STATE_SCHEMA + ", epoch string"
 
@@ -46,57 +45,27 @@ def _params_key(params: dict) -> str:
     return json.dumps(params or {}, sort_keys=True)
 
 
-def _read_meta(spark: SparkSession, path: str):
-    meta_path = f"{path.rstrip('/')}/{SKETCHSTORE_META_DIR}"
-    # driver-side Hadoop FS read first (the marker is one KB-sized JSON
-    # row; a Spark read job costs ~60 ms per epoch write and the epoch
-    # loop pays it every call); falls back to the Spark reader for any
-    # layout the plain read cannot handle
-    try:
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(meta_path)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        payloads = []
-        for st in fs.listStatus(jpath):
-            name = st.getPath().getName()
-            if st.isFile() and not name.startswith(("_", ".")):
-                stream = fs.open(st.getPath())
-                try:
-                    payloads.append(
-                        jvm.org.apache.commons.io.IOUtils.toString(
-                            stream, "UTF-8"))
-                finally:
-                    stream.close()
-        rows = []
-        for p in payloads:
-            for line in p.splitlines():
-                if line.strip():
-                    d = json.loads(line)
-                    rows.append({k: d.get(k) for k in
-                                 ("kind", "params", "value_kind", "version")})
-        return rows[0] if rows else None
-    except Exception:
-        pass
-    try:
-        rows = spark.read.schema(SKETCHSTORE_META_SCHEMA).json(meta_path) \
-            .collect()
-    except Exception:
-        rows = []
-    return rows[0] if rows else None
+def _meta_path(path: str) -> str:
+    return f"{path.rstrip('/')}/{SKETCHSTORE_META_DIR}"
+
+
+def _read_meta(spark: SparkSession, path: str) -> dict | None:
+    return manifest.read(_meta_path(path))
 
 
 def _stamp(spark: SparkSession, path: str, kind: str, params: dict,
            value_kind: str) -> None:
-    # driver-side Hadoop FS write: the marker is one KB-sized JSON row and
-    # the former 1-row Spark job cost ~4.5 s per stamp (measured), which
-    # dominated a fresh store's first epoch write; the reader
-    # (spark.read.json on the directory) is unchanged and reads both
-    # layouts
-    from .fsio import overwrite_json_marker
-    meta_path = f"{path.rstrip('/')}/{SKETCHSTORE_META_DIR}"
-    overwrite_json_marker(spark, meta_path, json.dumps({
+    manifest.write(f"{_meta_path(path)}/marker.json", {
         "kind": kind, "params": _params_key(params),
-        "value_kind": value_kind, "version": 1}))
+        "value_kind": value_kind, "version": 1})
+
+
+def _check(path: str, meta: dict, **want) -> None:
+    manifest.check(
+        "sketch store", path, meta,
+        "states of different kinds or parameters do not merge (register "
+        "widths / hash planes misalign), so the store would be corrupted. "
+        "Write to a fresh path or match the store's parameters.", **want)
 
 
 def _resolve_value_kind(kind: str, value_kind: str | None) -> str:
@@ -148,28 +117,19 @@ def write_sketch_epoch(df: DataFrame, col: str, path: str, epoch: str, *,
 
     meta = _read_meta(spark, path)
     if meta is not None:
-        got = (meta["kind"], meta["params"], meta["value_kind"])
-        want = (kind, _params_key(params), value_kind)
-        if got != want:
-            raise RuntimeError(
-                f"sketch store at {path} was written with (kind, params, "
-                f"value_kind)={got} but this epoch write is {want}: states "
-                "with different parameters do not merge (register widths / "
-                "hash planes misalign), so the store would be corrupted. "
-                "Write to a fresh path or match the store's parameters.")
-    else:
+        _check(path, meta, kind=kind, params=_params_key(params),
+               value_kind=value_kind)
+    elif manifest.names(path):
         # refuse to adopt foreign data silently, same as the signature store
-        try:
-            spark.read.parquet(path).schema
-            has_data = True
-        except Exception:
-            has_data = False
-        if has_data:
-            raise RuntimeError(
-                f"sketch store at {path} has data but no "
-                f"{SKETCHSTORE_META_DIR} marker: its sketch parameters are "
-                "unknown (foreign directory or pre-marker store). Point at "
-                "a fresh path.")
+        raise manifest.refuse(
+            "sketch store", path,
+            "its sketch parameters are unknown (foreign directory or "
+            "pre-marker store). Point at a fresh path.",
+            missing=SKETCHSTORE_META_DIR)
+    else:
+        # marker BEFORE data: a crashed data write leaves a marked store
+        # that the retry accepts, never data without a marker
+        _stamp(spark, path, kind, params, value_kind)
 
     states = partial_states(df, col, kind, params, value_kind)
     prior_used = False
@@ -177,7 +137,7 @@ def write_sketch_epoch(df: DataFrame, col: str, path: str, epoch: str, *,
         # lift the epoch's current states off the partition about to be
         # overwritten (<= states_per_epoch KB rows — bounded by the
         # constant, never by data size)
-        prior = spark.read.parquet(path) \
+        prior = spark.read.schema(STORE_SCHEMA).parquet(path) \
             .where(F.col("epoch") == str(epoch)) \
             .select("partition_id", "kind", "params", "payload").collect()
         if prior:
@@ -223,8 +183,6 @@ def write_sketch_epoch(df: DataFrame, col: str, path: str, epoch: str, *,
         out.write.mode("overwrite").partitionBy("epoch").parquet(path)
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    if meta is None:
-        _stamp(spark, path, kind, params, value_kind)
 
 
 def read_sketch_store(spark: SparkSession, path: str, *,
@@ -238,21 +196,16 @@ def read_sketch_store(spark: SparkSession, path: str, *,
     """
     meta = _read_meta(spark, path)
     if meta is None:
-        raise RuntimeError(
-            f"sketch store at {path} has no {SKETCHSTORE_META_DIR} marker: "
+        raise manifest.refuse(
+            "sketch store", path,
             "its sketch parameters are unknown, and merging states with "
             "mismatched parameters corrupts estimates. Rebuild the store "
-            "through write_sketch_epoch.")
-    if kind is not None and meta["kind"] != kind:
-        raise RuntimeError(
-            f"sketch store at {path} holds {meta['kind']!r} states but the "
-            f"caller expects {kind!r}.")
-    if params is not None and meta["params"] != _params_key(params):
-        raise RuntimeError(
-            f"sketch store at {path} was written with params="
-            f"{meta['params']} but the caller expects {_params_key(params)}: "
-            "states with different parameters do not merge.")
-    return spark.read.parquet(path)
+            "through write_sketch_epoch.", missing=SKETCHSTORE_META_DIR)
+    _check(path, meta, kind=kind,
+           params=None if params is None else _params_key(params))
+    # the explicit schema reads a store whose first data write crashed
+    # after its marker as empty instead of failing schema inference
+    return spark.read.schema(STORE_SCHEMA).parquet(path)
 
 
 def merge_sketch_range(spark: SparkSession, path: str, *,

@@ -49,12 +49,10 @@ a default hash family.
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..ops.dedup import minhash_signature_arrays
+from ..spark import manifest
 
 STORE_SCHEMA = "doc_id long, band int, minhash string"
 # novel-output layout marker: round-6 onward partitions the out store by
@@ -221,10 +219,11 @@ class StreamingNearDupDedup:
                  within_batch: str = "driver",
                  greedy_driver_finish_rows: int = 1_000_000) -> None:
         self.base_dir = base_dir
-        self.store_dir = os.path.join(base_dir, "store")
-        self.out_dir = os.path.join(base_dir, "novel")
-        self.sigless_dir = os.path.join(base_dir, "sigless")
-        self.meta_path = os.path.join(base_dir, "meta.json")
+        root = base_dir.rstrip("/")
+        self.store_dir = f"{root}/store"
+        self.out_dir = f"{root}/novel"
+        self.sigless_dir = f"{root}/sigless"
+        self.meta_path = f"{root}/meta.json"
         self.num_hashes = num_hashes
         self.k = k
         self.run_token = run_token
@@ -258,71 +257,64 @@ class StreamingNearDupDedup:
         # on every batch; a pre-round-5 store (no recorded family) was
         # written by the then-default band_md5.
         self.hash_family = hash_family
-        os.makedirs(base_dir, exist_ok=True)
-        if not os.path.exists(self.meta_path):
-            if any(os.path.exists(d) for d in
+        if not manifest.exists(self.meta_path):
+            if any(manifest.exists(d) for d in
                    (self.store_dir, self.out_dir, self.sigless_dir)):
                 # a populated store with no meta has an UNKNOWN hash
                 # family and out layout (e.g. meta.json deleted, or a
                 # foreign directory): attributing defaults would silently
                 # mix families. Refuse instead of guessing.
-                raise RuntimeError(
-                    f"store directories exist under {base_dir} but "
-                    "meta.json is missing: the store's hash_family and "
-                    "novel-output layout are unknown. Restore meta.json "
-                    "(with the family the store was written with), or "
-                    "point at a fresh base_dir.")
+                raise manifest.refuse(
+                    "signature store", base_dir,
+                    "store directories exist but meta.json is missing, so "
+                    "the store's hash_family and novel-output layout are "
+                    "unknown. Restore meta.json (with the family the store "
+                    "was written with), or point at a fresh base_dir.",
+                    missing="meta.json")
             # write meta BEFORE any store append: a crash between the
             # first batch's append and its meta update can never leave a
             # family-less populated store
             self._store_meta(-1)
 
-    # NOTE: the (run_token, last_batch_id, atomic tmp+rename) replay guard
-    # here mirrors ForeachBatchSketcher._load/_store (windowed.py), where
-    # the guard is coupled to per-window sketch payloads; a semantics fix
-    # to either must be applied to both (see commit a7d0c2f).
+    # The replay guard (run_token + last_batch_id in an atomically
+    # replaced manifest, spark.manifest) is the same as
+    # ForeachBatchSketcher's per-window state (windowed.py).
     def _load_meta(self) -> int:
-        if not os.path.exists(self.meta_path):
+        obj = manifest.read(self.meta_path)
+        if obj is None:
             return -1
-        with open(self.meta_path) as f:
-            obj = json.load(f)
         # family mismatch is fatal regardless of lineage: the parquet
         # store under store_dir was written by obj's family, and a new
         # run_token does not rewrite it
-        stored_fam = obj.get("hash_family", "band_md5")
-        if stored_fam != self.hash_family:
-            raise RuntimeError(
-                f"signature store at {self.base_dir} was written with "
-                f"hash_family={stored_fam!r} but this instance is "
-                f"configured with {self.hash_family!r}: the families' "
-                "signatures never collide, so continuing would silently "
-                "stop deduplicating against everything already stored. "
-                f"Pin hash_family={stored_fam!r}, or point at a fresh "
-                "base_dir to start a new store.")
+        manifest.check(
+            "signature store", self.base_dir,
+            {"hash_family": "band_md5", **obj},
+            "the families' signatures never collide, so continuing would "
+            "silently stop deduplicating against everything already "
+            "stored. Pin the store's hash_family, or point at a fresh "
+            "base_dir to start a new store.", hash_family=self.hash_family)
         # layout mismatch is equally fatal once novel output exists: a
         # pre-round-6 flat out store cannot take partitioned appends
         # (mixed layouts break partition discovery on read)
-        if os.path.exists(self.out_dir) and obj.get("out_layout") != OUT_LAYOUT:
-            raise RuntimeError(
-                f"novel output at {self.out_dir} was written in the "
-                "pre-round-6 flat layout (__batch_id as a data column); "
-                f"this version partitions by __batch_id ({OUT_LAYOUT!r}) "
-                "and appending would mix layouts. Migrate the store "
+        if obj.get("out_layout") != OUT_LAYOUT and \
+                manifest.exists(self.out_dir):
+            raise manifest.refuse(
+                "novel output", self.out_dir,
+                "the pre-round-6 flat layout (__batch_id as a data column) "
+                "cannot take partitioned appends. Migrate the store "
                 "(rewrite novel/ partitioned by __batch_id and add "
                 f"out_layout={OUT_LAYOUT!r} to meta.json), or point at a "
-                "fresh base_dir.")
+                "fresh base_dir.",
+                got=f"out_layout={obj.get('out_layout')!r}",
+                want=f"out_layout={OUT_LAYOUT!r}")
         if self.run_token is not None and obj.get("run_token") != self.run_token:
             return -1  # new checkpoint lineage: batch ids restart at 0
         return obj.get("last_batch_id", -1)
 
     def _store_meta(self, batch_id: int) -> None:
-        tmp = f"{self.meta_path}.tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump({"last_batch_id": batch_id,
-                       "run_token": self.run_token,
-                       "hash_family": self.hash_family,
-                       "out_layout": OUT_LAYOUT}, f)
-        os.replace(tmp, self.meta_path)
+        manifest.write(self.meta_path, {
+            "last_batch_id": batch_id, "run_token": self.run_token,
+            "hash_family": self.hash_family, "out_layout": OUT_LAYOUT})
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         if batch_id <= self._load_meta():
@@ -352,7 +344,7 @@ class StreamingNearDupDedup:
             # mode nothing does — the store never leaves executors either way
             exploded = sigs.select(
                 "doc_id", F.posexplode("sig").alias("band", "minhash"))
-            if os.path.exists(self.store_dir):
+            if manifest.exists(self.store_dir):
                 store = spark.read.schema(STORE_SCHEMA).parquet(self.store_dir)
                 collided_ids = (exploded
                                 .join(store, ["band", "minhash"], "left_semi")
@@ -399,7 +391,7 @@ class StreamingNearDupDedup:
             # NULLing text) can be arbitrarily larger than it.
             sigless_ids = batch_df.select("doc_id").join(
                 sigs.select("doc_id"), "doc_id", "left_anti")
-            if os.path.exists(self.sigless_dir):
+            if manifest.exists(self.sigless_dir):
                 seen_sigless = spark.read.schema("doc_id long") \
                     .parquet(self.sigless_dir)
                 sigless_ids = sigless_ids.join(seen_sigless, "doc_id",
@@ -420,7 +412,7 @@ class StreamingNearDupDedup:
                 # crash. Either way: exactly once.
                 emit_ids_df = novel_keep.unionByName(new_sigless)
                 emit = batch_df.join(emit_ids_df, "doc_id", "left_semi")
-                if os.path.exists(self.out_dir):
+                if manifest.exists(self.out_dir):
                     # replay guard for THIS batch only: docs the crashed
                     # attempt of the same batch already wrote. Earlier
                     # batches cannot re-emit (watermark skips applied ids;

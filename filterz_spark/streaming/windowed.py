@@ -9,28 +9,29 @@ Two layers:
    micro-batches via ``foreachBatch`` — each batch builds per-window partial
    sketches with the SAME kernels as the batch path (mapInArrow partials +
    merge), then OR/max/add-merges them into a persistent per-window state
-   store (parquet). Because every sketch here is a commutative monoid, late
-   or out-of-order data folds in correctly regardless of arrival order —
-   the streaming/batch consistency the merge tests gate on. Replays are
-   handled too: foreachBatch is at-least-once, so each window records the
-   last applied batch_id and skips redelivered batches (exactly-once state
-   for additive sketches).
+   store (one JSON manifest per window). Because every sketch here is a
+   commutative monoid, late or out-of-order data folds in correctly
+   regardless of arrival order — the streaming/batch consistency the merge
+   tests gate on. Replays are handled too: foreachBatch is at-least-once,
+   so each window records the last applied batch_id and skips redelivered
+   batches (exactly-once state for additive sketches).
 
 Scale posture: state per window is one sketch payload (KB-MB), not row data;
 merge cost per batch is O(windows_touched). The foreachBatch pattern is the
 standard production shape for sketch state Spark can't express natively
 (applyInPandasWithState has the same semantics but pins state to the state
-store; parquet state keeps it inspectable and resumable like checkpoint.py).
+store; JSON window state keeps it inspectable and resumable like
+checkpoint.py).
 """
 
 from __future__ import annotations
 
 import json
-import os
 
 from pyspark.sql import DataFrame, functions as F
 
 from ..sketches import SKETCH_KINDS, deserialize_sketch
+from ..spark import manifest
 from ..spark.merge import partial_states
 
 
@@ -129,18 +130,17 @@ class ForeachBatchSketcher:
         self.key_col = key_col
         self.window = window
         self.run_token = run_token
-        os.makedirs(state_dir, exist_ok=True)
 
+    # window state files are named w_<date>_<HH-mm-ss>.json: ":" is not
+    # portable in file names, so the time part swaps it for "-"
     def _state_path(self, window_start: str) -> str:
         safe = window_start.replace(":", "-").replace(" ", "_")
-        return os.path.join(self.state_dir, f"w_{safe}.json")
+        return f"{self.state_dir.rstrip('/')}/w_{safe}.json"
 
     def _load(self, window_start: str):
-        p = self._state_path(window_start)
-        if not os.path.exists(p):
+        obj = manifest.read(self._state_path(window_start))
+        if obj is None:
             return SKETCH_KINDS[self.kind].zero(**self.params), -1
-        with open(p) as f:
-            obj = json.load(f)
         sk = deserialize_sketch(self.kind, bytes.fromhex(obj["payload"]),
                                 obj["params"])
         if self.run_token is not None and obj.get("run_token") != self.run_token:
@@ -148,15 +148,10 @@ class ForeachBatchSketcher:
         return sk, obj.get("last_batch_id", -1)
 
     def _store(self, window_start: str, sketch, batch_id: int) -> None:
-        # write-then-rename so a crash mid-write never corrupts window state
-        path = self._state_path(window_start)
-        tmp = f"{path}.tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump({"params": sketch.params(),
-                       "payload": sketch.serialize().hex(),
-                       "last_batch_id": batch_id,
-                       "run_token": self.run_token}, f)
-        os.replace(tmp, path)
+        # atomic replace: a crash mid-write never corrupts window state
+        manifest.write(self._state_path(window_start), {
+            "params": sketch.params(), "payload": sketch.serialize().hex(),
+            "last_batch_id": batch_id, "run_token": self.run_token})
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         windowed = batch_df.withColumn(
@@ -186,15 +181,14 @@ class ForeachBatchSketcher:
     def results(self) -> dict[str, float]:
         """window_start -> estimate for every window seen so far."""
         out = {}
-        for fname in sorted(os.listdir(self.state_dir)):
-            if not fname.startswith("w_"):
+        for fname in manifest.names(self.state_dir):
+            if not (fname.startswith("w_") and fname.endswith(".json")):
                 continue
-            w = fname[2:-5].replace("_", " ")
-            w = w[:13].replace("-", ":")  # undo filename mangling crudely
-            with open(os.path.join(self.state_dir, fname)) as f:
-                obj = json.load(f)
-            sk = deserialize_sketch(self.kind, bytes.fromhex(obj["payload"]), obj["params"])
-            key = fname[2:-5]
+            date, _, time = fname[2:-5].partition("_")
+            obj = manifest.read(f"{self.state_dir.rstrip('/')}/{fname}")
+            sk = deserialize_sketch(self.kind, bytes.fromhex(obj["payload"]),
+                                    obj["params"])
+            key = f"{date} {time.replace('-', ':')}"
             if hasattr(sk, "estimate"):
                 out[key] = sk.estimate()
             elif hasattr(sk, "quantile"):

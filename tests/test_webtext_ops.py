@@ -174,7 +174,8 @@ class TestDuplicateSpans:
         p = duplicate_spans(df)._jdf.queryExecution() \
             .executedPlan().toString()
         assert "Window" not in p, p
-        assert p.count("Exchange hashpartitioning") <= 5, p
+        assert p.count("Exchange hashpartitioning") == 5, p
+        assert "ReusedExchange" not in p, p
         assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
         pw = duplicate_spans(df, owner_strategy="window") \
             ._jdf.queryExecution().executedPlan().toString()
