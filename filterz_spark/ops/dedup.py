@@ -321,90 +321,55 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = 8, k: int = 2,
     return arr.select("doc_id", F.posexplode("sig").alias("band", "minhash"))
 
 
+def _bucket_pairs(rows: DataFrame, keys: list[str], member,
+                  max_bucket_size: int | None) -> DataFrame:
+    """Ordered within-bucket pairs ``(doc_a, doc_b)``, ``doc_a < doc_b``:
+    ONE shuffle — groupBy the bucket ``keys``, collect the sorted
+    ``member`` list, drop singleton and (when ``max_bucket_size`` is set)
+    over-cap buckets with a free ``size()`` filter on the aggregated row,
+    then expand the pairs expression-side: posexplode the list, and pair
+    each member with the slice after it. No self-join, no window sort.
+    A pair sharing several buckets appears once per shared bucket."""
+    buckets = (rows.groupBy(*keys)
+               .agg(F.sort_array(F.collect_list(member)).alias("ids"))
+               .filter(F.size("ids") >= 2))
+    if max_bucket_size is not None:
+        buckets = buckets.filter(F.size("ids") <= max_bucket_size)
+    e = buckets.select("ids", F.posexplode("ids").alias("i", "doc_a"))
+    return e.select(
+        "doc_a",
+        F.explode(F.slice("ids", F.col("i") + 2,
+                          F.size("ids") - F.col("i") - 1)).alias("doc_b"))
+
+
 def lsh_candidate_pairs(docs: DataFrame, num_hashes: int = 8, k: int = 2,
                         max_bucket_size: int | None = 10_000,
-                        materialize_signatures: bool = True,
                         signatures: DataFrame | None = None,
-                        pair_strategy: str = "group",
                         hash_family: str = "km_md5") -> DataFrame:
     """Candidate near-dup pairs: docs sharing any (band, minhash) bucket.
 
-    The equi-join on the bucket key is the scale move: no all-pairs shuffle,
-    only docs with a colliding band meet. Returns (doc_a, doc_b, n_bands).
+    Grouping on the bucket key is the scale move: no all-pairs shuffle,
+    only docs with a colliding band meet, and the pairs are expanded from
+    each bucket's member list in ONE shuffle (no self-join). Returns
+    (doc_a, doc_b, n_bands), n_bands = the number of shared buckets.
 
-    ``max_bucket_size`` guards the self-join against degenerate hot buckets
-    (e.g. millions of empty/boilerplate docs sharing a minhash): a bucket of
-    b docs yields b^2/2 pairs, so one web-scale junk cluster would otherwise
+    ``max_bucket_size`` guards against degenerate hot buckets (e.g.
+    millions of empty/boilerplate docs sharing a minhash): a bucket of b
+    docs yields b^2/2 pairs, so one web-scale junk cluster would otherwise
     go quadratic. Buckets above the cap are dropped from candidate
     generation (their members are boilerplate-identical; handle them with
-    exact_dedup, which is linear). None disables the cap.
+    exact_dedup, which is linear). None disables the cap. Skew: every
+    bucket lands on one reducer as one member array, so a hot bucket is
+    one reducer's work — that is what the cap bounds.
 
-    ``materialize_signatures`` (default True) localCheckpoints the compact
-    array-form signature table (one row per doc) before the self-join —
-    but ONLY under ``pair_strategy="join"``: Catalyst does not share the
-    subtree between the join sides, so the lazy join form runs the
-    shingle+md5 pipeline twice; the group plan scans it exactly once and
-    skips the checkpoint (materializing there is pure cost). To share one
-    signature pass across the candidate -> Jaccard -> components pipeline,
-    supply your own (materialized) ``signatures`` array table.
-
-    ``pair_strategy`` picks the within-bucket pair-generation plan; both
-    produce identical results and shuffle the SAME (band, minhash) key, so
-    they share one skew profile (a hot bucket lands on one reducer either
-    way — that is what ``max_bucket_size`` bounds):
-
-    - ``"group"`` (default): ONE shuffle — groupBy the bucket key, collect
-      the (capped) member list, expand ordered pairs expression-side
-      (posexplode x slice). No self-join, no window sort, and the bucket
-      cap is a free ``size()`` filter on the aggregated row.
-    - ``"join"``: the classic bucketed self-join (window count for the cap,
-      equi-join, pair groupBy). Kept for memory-constrained reducers: its
-      per-bucket state is streamed join rows, never a whole member array.
+    The corpus is scanned once. To share one signature pass across the
+    candidate -> Jaccard -> components pipeline, supply your own
+    (materialized) ``signatures`` array table.
     """
-    if pair_strategy not in ("group", "join"):
-        raise ValueError(f"unknown pair_strategy {pair_strategy!r}")
-    sig_arr = signatures if signatures is not None \
-        else minhash_signature_arrays(docs, num_hashes, k, hash_family)
-    if materialize_signatures and signatures is None and pair_strategy == "join":
-        # only the self-join duplicates the signature subtree; the group
-        # plan scans it exactly once, so materializing there is pure cost
-        sig_arr = sig_arr.localCheckpoint(eager=True)
-    sig = minhash_signatures(docs, num_hashes, k, signatures=sig_arr)
-
-    if pair_strategy == "group":
-        buckets = (sig.groupBy("band", "minhash")
-                   .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-                   .filter(F.size("ids") >= 2))
-        if max_bucket_size is not None:
-            buckets = buckets.filter(F.size("ids") <= max_bucket_size)
-        # ordered pairs from the sorted member list: (i, doc_a) x the tail
-        # slice after i — doc_a < doc_b holds by construction
-        e = buckets.select("ids", F.posexplode("ids").alias("i", "doc_a"))
-        pairs = e.select(
-            "doc_a",
-            F.explode(F.slice("ids", F.col("i") + 2,
-                              F.size("ids") - F.col("i") - 1)).alias("doc_b"))
-        return (pairs.groupBy("doc_a", "doc_b")
-                .agg(F.count("*").cast("long").alias("n_bands")))
-
-    if max_bucket_size is not None:
-        # bucket size as a WINDOW count over the same (band, minhash) key
-        # the self-join shuffles on — no extra aggregation+join subtree
-        # (which would re-execute the whole signature pipeline per side)
-        from pyspark.sql import Window
-        w = Window.partitionBy("band", "minhash")
-        sig = (sig.withColumn("bucket_n", F.count("*").over(w))
-               .filter(F.col("bucket_n") <= max_bucket_size)
-               .drop("bucket_n"))
-    a = sig.alias("a")
-    b = sig.alias("b")
-    return (
-        a.join(b, [F.col("a.band") == F.col("b.band"),
-                   F.col("a.minhash") == F.col("b.minhash"),
-                   F.col("a.doc_id") < F.col("b.doc_id")])
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").cast("long").alias("n_bands"))
-    )
+    sig = minhash_signatures(docs, num_hashes, k, signatures, hash_family)
+    pairs = _bucket_pairs(sig, ["band", "minhash"], "doc_id", max_bucket_size)
+    return (pairs.groupBy("doc_a", "doc_b")
+            .agg(F.count("*").cast("long").alias("n_bands")))
 
 
 def ngram_jaccard_pairs(docs: DataFrame, k: int = 2, min_jaccard: float = 0.0,
@@ -595,16 +560,18 @@ def simhash_near_pairs(docs: DataFrame, max_hamming: int = 3,
     threshold (then an exact hamming check filters). More blocks = more
     bucket joins, so large max_hamming trades cost for recall guarantee.
 
-    Pair generation uses the same single-shuffle group expansion as
-    ``lsh_candidate_pairs``: groupBy the (block, bucket) key, collect the
-    member list (with each member's simhash riding along), expand ordered
-    pairs expression-side. ``max_bucket_size`` (OPT-IN, default None =
+    Pair generation is ``lsh_candidate_pairs``'s single-shuffle bucket
+    expansion, keyed on (block, bucket), with each member's simhash riding
+    along in the member list. ``max_bucket_size`` (OPT-IN, default None =
     uncapped so the recall guarantee above is unconditional) bounds the
     quadratic blow-up of a degenerate bucket (e.g. a boilerplate cluster
     collapsing one bit block): over-cap buckets are dropped from candidate
     generation — the recall guarantee then holds only for pairs outside
     such buckets (handle the dropped mass with exact_dedup, linear).
+    ``max_hamming`` must be >= 0.
     """
+    if max_hamming < 0:
+        raise ValueError(f"max_hamming must be >= 0, got {max_hamming}")
     n_blocks = max_hamming + 1
     block_bits = (SIMHASH_BITS + n_blocks - 1) // n_blocks
     sh = simhash(docs)
@@ -618,19 +585,12 @@ def simhash_near_pairs(docs: DataFrame, max_hamming: int = 3,
             for q in range(n_blocks)
         ])).alias("e"),
     ).select("doc_id", "simhash", "e.q", "e.bucket")
-    buckets = (blocks.groupBy("q", "bucket")
-               .agg(F.sort_array(F.collect_list(F.struct("doc_id", "simhash")))
-                    .alias("mem"))
-               .filter(F.size("mem") >= 2))
-    if max_bucket_size is not None:
-        buckets = buckets.filter(F.size("mem") <= max_bucket_size)
-    e = buckets.select("mem", F.posexplode("mem").alias("i", "a"))
-    pairs = e.select(
-        F.col("a.doc_id").alias("doc_a"), F.col("a.simhash").alias("ha"),
-        F.explode(F.slice("mem", F.col("i") + 2,
-                          F.size("mem") - F.col("i") - 1)).alias("b"))
-    cand = (pairs.select("doc_a", F.col("b.doc_id").alias("doc_b"),
-                         "ha", F.col("b.simhash").alias("hb"))
+    pairs = _bucket_pairs(blocks, ["q", "bucket"],
+                          F.struct("doc_id", "simhash"), max_bucket_size)
+    cand = (pairs.select(F.col("doc_a.doc_id").alias("doc_a"),
+                         F.col("doc_b.doc_id").alias("doc_b"),
+                         F.col("doc_a.simhash").alias("ha"),
+                         F.col("doc_b.simhash").alias("hb"))
             .distinct())
     hamming = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
     return cand.select("doc_a", "doc_b", hamming.cast("int").alias("hamming")) \

@@ -331,9 +331,11 @@ def stratified_sample(df: DataFrame, key_col: str, fractions: dict,
     return df.filter(cond)
 
 
+_CHECK_EVERY = 3
+
+
 def dedup_components(pairs: DataFrame, all_ids: DataFrame,
-                     id_col: str = "doc_id", max_iters: int = 20,
-                     check_every: int = 3) -> DataFrame:
+                     id_col: str = "doc_id", max_iters: int = 20) -> DataFrame:
     """Connected components over near-dup pairs: (doc_id, cluster_id) where
     cluster_id = min doc id reachable through the pair graph.
 
@@ -342,7 +344,7 @@ def dedup_components(pairs: DataFrame, all_ids: DataFrame,
     iteration count is O(graph diameter), small for near-dup clusters.
 
     Scale hygiene: lineage is cut with ``localCheckpoint`` every
-    ``check_every`` rounds (unbounded iterative lineage re-executes the
+    ``_CHECK_EVERY`` rounds (unbounded iterative lineage re-executes the
     whole chain on any recompute and blows up the planner), and the
     driver-side convergence check — an extra job per round in the naive
     form — is batched to checkpoint rounds as one aggregate over the
@@ -374,7 +376,7 @@ def dedup_components(pairs: DataFrame, all_ids: DataFrame,
                 F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
             ).alias("label"))
         )
-        if it % check_every == 0 or it == max_iters:
+        if it % _CHECK_EVERY == 0 or it == max_iters:
             # cut lineage, then one cheap agg on the materialized labels:
             # labels only DECREASE, so an unchanged signature across a whole
             # check window means fixpoint. bit_xor(xxhash64(label)) is the

@@ -378,9 +378,8 @@ def semdedup(embeddings: DataFrame, threshold: float = 0.95, *,
         # the salted pair join plus the final kept-flag select, and
         # Catalyst does not share the subtree — without the barrier the
         # Arrow-matmul assignment stage (the dominant cost at scale)
-        # re-executes ~3x per action. Same materialize-signatures
-        # discipline as lsh_candidate_pairs; the cluster_col path skips
-        # it (its assignment is a cheap projection).
+        # re-executes ~3x per action. The cluster_col path skips it (its
+        # assignment is a cheap projection).
         normed = normed.localCheckpoint(eager=False)
     dropped = (_salted_pair_join(normed, id_col, ["cluster"])
                .filter(F.col("cosine") >= threshold)

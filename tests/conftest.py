@@ -1,5 +1,6 @@
 import os
 import sys
+from contextlib import contextmanager
 
 import numpy as np
 import pytest
@@ -50,3 +51,23 @@ def spark():
 
     s = get_session(cores=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     yield s
+
+
+@contextmanager
+def session_checkpoint_dir(spark, path):
+    """Run the block with the session's checkpoint dir set to ``path`` (or
+    unset when ``path`` is None), then restore the previous setting.
+    SparkContext has no public call that unsets the dir, so the scala
+    ``checkpointDir`` option is written through the JVM gateway."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    old = jsc.checkpointDir()
+    set_dir = getattr(jsc, "checkpointDir_$eq")
+    if path is None:
+        set_dir(spark._jvm.scala.Option.apply(None))
+    else:
+        sc.setCheckpointDir(str(path))
+    try:
+        yield
+    finally:
+        set_dir(old)

@@ -3,6 +3,8 @@ each checked against an exact Spark SQL computation on the driver testdata
 (the DuckDB oracle twin runs in tools/check_oracles.py / driver harness).
 """
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -162,6 +164,36 @@ class TestDedup:
         b = set(map(tuple, simhash_near_pairs(both, 2, 10_000)
                     .select("doc_a", "doc_b").collect()))
         assert a == b
+
+    @pytest.mark.parametrize("max_hamming", [0, 3])
+    def test_simhash_near_pairs_brute_force_recall(self, spark, docs,
+                                                   max_hamming):
+        """Pigeonhole recall 1: with no cap, the result is exactly every
+        pair whose simhashes differ in at most ``max_hamming`` bits."""
+        from itertools import combinations
+
+        from filterz_spark.ops.dedup import simhash, simhash_near_pairs
+        exact = docs.limit(3).withColumn("doc_id", F.col("doc_id") + 1_000_000)
+        edited = (docs.limit(20)
+                  .withColumn("doc_id", F.col("doc_id") + 2_000_000)
+                  .withColumn("text", F.concat("text", F.lit(" extra"))))
+        corpus = docs.unionByName(exact).unionByName(edited)
+        sh = sorted((r["doc_id"], r["simhash"])
+                    for r in simhash(corpus).collect())
+        want = {(a, b, bin(ha ^ hb).count("1"))
+                for (a, ha), (b, hb) in combinations(sh, 2)
+                if bin(ha ^ hb).count("1") <= max_hamming}
+        # the planted clones put pairs at every distance up to the threshold
+        assert {h for _, _, h in want} == set(range(max_hamming + 1))
+        got = {tuple(r) for r in simhash_near_pairs(corpus, max_hamming)
+               .select("doc_a", "doc_b", "hamming").collect()}
+        assert got == want
+
+    def test_simhash_near_pairs_rejects_negative_hamming(self, spark, docs):
+        from filterz_spark.ops.dedup import simhash_near_pairs
+        for bad in (-1, -2):
+            with pytest.raises(ValueError, match="max_hamming"):
+                simhash_near_pairs(docs, max_hamming=bad)
 
 
 class TestSignatureStore:
@@ -584,27 +616,27 @@ class TestCurationPipeline:
             curate_training_set(docs, docs.limit(1), {})
 
     def test_barrier_modes_identical(self, spark, docs, tmp_path):
-        """Every barrier mechanism (executor-local checkpoint / reliable
-        checkpoint / DISK_ONLY persist) yields the same curated rows — the
-        durability choice is operational, never semantic."""
+        """The barrier follows the session: a reliable checkpoint into the
+        checkpoint dir when one is set, a local checkpoint otherwise — and
+        both yield the same curated rows (durability is operational, never
+        semantic)."""
+        from conftest import session_checkpoint_dir
         from filterz_spark.ops.pipeline import curate_training_set
         bench = docs.filter("doc_id % 50 = 0")
-        args = (docs, bench, {"en": 1.0, "de": 1.0})
 
-        def rows(**kw):
-            return {tuple(r) for r in
-                    curate_training_set(*args, **kw).collect()}
+        def rows():
+            return {tuple(r) for r in curate_training_set(
+                docs, bench, {"en": 1.0, "de": 1.0}).collect()}
 
-        base = rows()
-        assert base
-        spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-        assert rows(barrier="reliable") == base
-        # persist mode: the KB-sized projected survivor cache is left
-        # registered by design (the documented caller contract) — not
-        # clearCache()d here, which would evict the module's docs fixture
-        assert rows(barrier="persist") == base
-        with pytest.raises(ValueError, match="unknown barrier"):
-            curate_training_set(*args, barrier="none")
+        with session_checkpoint_dir(spark, None):
+            local = rows()
+        ckpt = tmp_path / "ckpt"
+        with session_checkpoint_dir(spark, ckpt):
+            reliable = rows()
+        assert local and reliable == local
+        # the durable form really checkpointed into the session's dir
+        assert any(d.startswith("rdd-")
+                   for _, dirs, _ in os.walk(ckpt) for d in dirs)
 
 
 class TestSamplingAndNormalization:
@@ -649,25 +681,45 @@ class TestSamplingAndNormalization:
         assert again.collect()[0]["norm_text"] == out[1]
 
 
-class TestLshStrategies:
-    def test_group_and_join_strategies_identical(self, spark, docs):
-        from filterz_spark.ops.dedup import lsh_candidate_pairs
-        g = {(r["doc_a"], r["doc_b"]): r["n_bands"]
-             for r in lsh_candidate_pairs(docs, pair_strategy="group").collect()}
-        j = {(r["doc_a"], r["doc_b"]): r["n_bands"]
-             for r in lsh_candidate_pairs(docs, pair_strategy="join").collect()}
-        assert g == j and len(g) > 0
+class TestLshCandidatePairs:
+    def test_matches_driver_recompute(self, spark, docs):
+        """Every pair sharing a (band, minhash) bucket of size 2..cap, with
+        n_bands = the number of shared buckets — recomputed on the driver
+        from the collected signatures, uncapped and with a cap that drops
+        some buckets."""
+        from itertools import combinations
 
-    def test_group_strategy_respects_bucket_cap(self, spark, docs):
+        from filterz_spark.ops.dedup import (lsh_candidate_pairs,
+                                             minhash_signature_arrays)
+        buckets = {}
+        for r in minhash_signature_arrays(docs).collect():
+            for band, mh in enumerate(r["sig"]):
+                buckets.setdefault((band, mh), []).append(r["doc_id"])
+
+        def expected(cap):
+            out = {}
+            for ids in buckets.values():
+                if 2 <= len(ids) <= (cap or len(ids)):
+                    for ab in combinations(sorted(ids), 2):
+                        out[ab] = out.get(ab, 0) + 1
+            return out
+
+        def got(cap):
+            return {(r["doc_a"], r["doc_b"]): r["n_bands"] for r in
+                    lsh_candidate_pairs(docs, max_bucket_size=cap).collect()}
+
+        sizes = sorted({len(v) for v in buckets.values() if len(v) >= 2})
+        assert len(sizes) >= 2, sizes
+        cap = sizes[0]
+        full, capped = expected(None), expected(cap)
+        assert capped and len(capped) < len(full)
+        assert got(None) == full
+        assert got(cap) == capped
+
+    def test_bucket_cap_one_yields_no_pairs(self, spark, docs):
         from filterz_spark.ops.dedup import lsh_candidate_pairs
         # cap of 1 excludes every bucket with >= 2 members: no pairs at all
-        assert lsh_candidate_pairs(docs, max_bucket_size=1,
-                                   pair_strategy="group").count() == 0
-
-    def test_unknown_strategy_rejected(self, spark, docs):
-        from filterz_spark.ops.dedup import lsh_candidate_pairs
-        with pytest.raises(ValueError, match="pair_strategy"):
-            lsh_candidate_pairs(docs, pair_strategy="nope")
+        assert lsh_candidate_pairs(docs, max_bucket_size=1).count() == 0
 
 
 class TestPq:

@@ -54,7 +54,7 @@ def main():
     from filterz_spark.ops.dedup import lsh_candidate_pairs
     docs = spark.read.parquet(os.path.join(SF, "documents.parquet"))
     dump("minhash_lsh_band", lsh_candidate_pairs(
-        docs, 8, 3, materialize_signatures=True, hash_family="band_md5"))
+        docs, 8, 3, hash_family="band_md5"))
 
     # the sketch legs' driver-merge input: before = partials + the orderBy
     # tree_merge used to run (range exchange whose boundary sampling

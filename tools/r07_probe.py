@@ -65,18 +65,16 @@ def main():
     # --- hypothesis A: doc legs, scan parallelism ---
     sc.setJobDescription("minhash_lsh base")
     timed("minhash_lsh_base", lambda: lsh_candidate_pairs(
-        docs, 8, 3, materialize_signatures=True).count())
+        docs, 8, 3).count())
     sc.setJobDescription("minhash_lsh repart")
     timed("minhash_lsh_repart", lambda: lsh_candidate_pairs(
-        docs32, 8, 3, materialize_signatures=True).count())
+        docs32, 8, 3).count())
     sc.setJobDescription("minhash_band base")
     timed("minhash_band_base", lambda: lsh_candidate_pairs(
-        docs, 8, 3, materialize_signatures=True,
-        hash_family="band_md5").count())
+        docs, 8, 3, hash_family="band_md5").count())
     sc.setJobDescription("minhash_band repart")
     timed("minhash_band_repart", lambda: lsh_candidate_pairs(
-        docs32, 8, 3, materialize_signatures=True,
-        hash_family="band_md5").count())
+        docs32, 8, 3, hash_family="band_md5").count())
     sc.setJobDescription("decontaminate base")
     timed("decon_base", lambda: ngram_decontaminate(
         docs.filter("doc_id % 50 != 0"), docs.filter("doc_id % 50 = 0"),

@@ -54,11 +54,10 @@ def main():
         minhash_signature_arrays(docs32, 8, 3, "band_md5")))
     sc.setJobDescription("km full")
     timed("km_full", lambda: lsh_candidate_pairs(
-        docs32, 8, 3, materialize_signatures=True).count())
+        docs32, 8, 3).count())
     sc.setJobDescription("band full")
     timed("band_full", lambda: lsh_candidate_pairs(
-        docs32, 8, 3, materialize_signatures=True,
-        hash_family="band_md5").count())
+        docs32, 8, 3, hash_family="band_md5").count())
 
     # --- curate decomposition (docs32) ---
     norm = normalize_text(docs32, keep_cols=("lang",))

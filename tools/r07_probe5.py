@@ -39,7 +39,7 @@ def main():
 
     sc.setJobDescription("km current (string buckets)")
     timed("km_current", lambda: lsh_candidate_pairs(
-        docs, 8, 3, materialize_signatures=True).count())
+        docs, 8, 3).count())
 
     def km_longs():
         num_hashes, k = 8, 3
@@ -71,7 +71,7 @@ def main():
     sc.setJobDescription("km long buckets")
     timed("km_longs", lambda: km_longs().count())
     out["km_current_rows"] = lsh_candidate_pairs(
-        docs, 8, 3, materialize_signatures=True).count()
+        docs, 8, 3).count()
     out["km_longs_rows"] = km_longs().count()
 
     print(json.dumps(out))
