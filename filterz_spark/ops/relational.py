@@ -9,13 +9,15 @@
 - ``sessionize``: event sessionization via window functions (lag + gap
   cutoff + running session counter) — pure JVM window exec, oracle-checkable.
 - ``dedup_components``: connected components over near-dup candidate pairs
-  (iterative min-label propagation, the dedup-cluster step after LSH);
-  deterministic exact fixpoint, oracle-checkable against a recursive CTE.
+  (min-label propagation, the dedup-cluster step after LSH): one join per
+  round, stopped when the labels' exact sum is unchanged (labels never
+  increase, so that is the fixpoint); oracle-checkable against a
+  recursive CTE.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Observation, Window, functions as F
 
 
 def filter_prefiltered_join(probe_df: DataFrame, build_df: DataFrame,
@@ -331,86 +333,89 @@ def stratified_sample(df: DataFrame, key_col: str, fractions: dict,
     return df.filter(cond)
 
 
-_CHECK_EVERY = 3
+def _label_sum(col: str):
+    # decimal(38,0): a sum of 64-bit ids cannot overflow at any row
+    # count Spark can hold
+    return F.sum(F.col(col).cast("decimal(38,0)"))
+
+
+def _free_checkpoint(df: DataFrame) -> None:
+    """Drop the blocks of a ``localCheckpoint`` frame. ``unpersist`` cannot:
+    the checkpointed RDD sits in the frame's LogicalRDD, not in the cache
+    manager."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def dedup_components(pairs: DataFrame, all_ids: DataFrame,
                      id_col: str = "doc_id", max_iters: int = 20) -> DataFrame:
     """Connected components over near-dup pairs: (doc_id, cluster_id) where
-    cluster_id = min doc id reachable through the pair graph.
+    cluster_id = min doc id reachable through the pair graph induced by
+    ``all_ids`` (a pair with an endpoint outside ``all_ids`` is ignored).
 
-    Iterative min-label propagation to fixpoint (large-scale dedup's
-    cluster-assignment step). Each iteration is one join + aggregate; the
-    iteration count is O(graph diameter), small for near-dup clusters.
+    Min-label propagation to an exact fixpoint (large-scale dedup's
+    cluster-assignment step). Only ids that have an edge iterate: the
+    edges (both directions plus a self-loop per node) are cached once,
+    round 1 labels each node with the least of itself and its
+    neighbours, and every later round is one join of the edges with the
+    previous labels and one ``min`` aggregate, ``localCheckpoint``ed so
+    lineage never grows past a round. The labels settle within the
+    graph's diameter in rounds; one more round confirms it.
 
-    Scale hygiene: lineage is cut with ``localCheckpoint`` every
-    ``_CHECK_EVERY`` rounds (unbounded iterative lineage re-executes the
-    whole chain on any recompute and blows up the planner), and the
-    driver-side convergence check — an extra job per round in the naive
-    form — is batched to checkpoint rounds as one aggregate over the
-    already-materialized labels. Raises if the propagation has not
-    converged after ``max_iters`` (silently returning partial components
-    would mislabel clusters).
+    Stop test: the self-loop makes every label non-increasing from round
+    to round, so an unchanged sum of labels means no label changed — a
+    fixpoint, exactly. The sum is taken in ``decimal(38,0)`` (it cannot
+    overflow) by an ``observe`` on the frame being checkpointed, so it
+    rides on the round's own job. Raises if the labels have not settled
+    within ``max_iters`` propagation rounds (silently returning partial
+    components would mislabel clusters). Superseded round checkpoints
+    and the edge cache are freed; the returned frame reads the last
+    checkpoint.
     """
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionByName(pairs.select(F.col("doc_b").alias("src"),
-                                  F.col("doc_a").alias("dst")))
-        .distinct()
-        .cache()
-    )
-    labels = all_ids.select(F.col(id_col).alias("node"),
-                            F.col(id_col).alias("label"))
-    last_sig = None
-    converged = False
-    it = 0
-    while it < max_iters:
-        it += 1
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.node)
-            .groupBy("src").agg(F.min("label").alias("nlabel"))
-        )
-        labels = (
-            labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
-            .select("node", F.least(
-                F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
-            ).alias("label"))
-        )
-        if it % _CHECK_EVERY == 0 or it == max_iters:
-            # cut lineage, then one cheap agg on the materialized labels:
-            # labels only DECREASE, so an unchanged signature across a whole
-            # check window means fixpoint. bit_xor(xxhash64(label)) is the
-            # primary aggregate: order-independent, overflow-free at any
-            # scale (a long sum of 63-bit hashed ids overflows — wrapping
-            # silently in non-ANSI mode, raising in ANSI mode), and any
-            # change in the label multiset flips it with overwhelming
-            # probability; avg adds an independent aliasing check.
-            labels = labels.localCheckpoint(eager=True)
-            sig = tuple(labels.agg(F.bit_xor(F.xxhash64("label")), F.count("*"),
-                                   F.avg("label")).collect()[0])
-            if sig == last_sig:
-                converged = True
-                break
-            last_sig = sig
-    if not converged:
-        # one final exactness pass: fixpoint may have landed between checks
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.node)
-            .groupBy("src").agg(F.min("label").alias("nlabel"))
-        )
-        still = (
-            labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
-            .filter(F.coalesce(F.col("nlabel"), F.col("label")) < F.col("label"))
-            .count()
-        )
-        if still:
-            raise RuntimeError(
-                f"dedup_components did not converge in {max_iters} iterations "
-                f"({still} labels still decreasing) — the pair graph has a "
-                f"longer diameter; raise max_iters")
-    edges.unpersist()
-    return labels.select(F.col("node").alias(id_col),
-                         F.col("label").alias("cluster_id"))
+    ids = all_ids.select(F.col(id_col).alias("a"))
+    linked = (pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
+              .join(ids, "a", "left_semi")
+              .join(ids.withColumnRenamed("a", "b"), "b", "left_semi"))
+    # both directions plus a self-loop per endpoint, hash-partitioned by
+    # src: the distinct and every round's min-by-src need no other shuffle
+    edges = (linked.select(F.inline(F.array(*(
+                F.struct(F.col(src).alias("src"), F.col(dst).alias("dst"))
+                for src, dst in (("a", "b"), ("b", "a"), ("a", "a"), ("b", "b"))))))
+             .repartition("src").distinct().cache())
+    labels, converged = None, False
+    try:
+        obs = Observation()
+        labels = (edges.groupBy("src").agg(F.min("dst").alias("label"))
+                  .withColumnRenamed("src", "node")
+                  .observe(obs, _label_sum("node").alias("before"),
+                           _label_sum("label").alias("after"))
+                  .localCheckpoint(eager=True))
+        before, after = obs.get["before"], obs.get["after"]
+        rounds = 1
+        while before != after:
+            if rounds > max_iters:
+                raise RuntimeError(
+                    f"dedup_components did not converge in {max_iters} "
+                    f"iterations — the pair graph has a longer diameter; "
+                    f"raise max_iters")
+            obs = Observation()
+            nxt = (edges.join(labels.withColumnRenamed("node", "dst"), "dst")
+                   .groupBy("src").agg(F.min("label").alias("label"))
+                   .withColumnRenamed("src", "node")
+                   .observe(obs, _label_sum("label").alias("after"))
+                   .localCheckpoint(eager=True))
+            _free_checkpoint(labels)
+            labels = nxt
+            before, after = after, obs.get["after"]
+            rounds += 1
+        converged = True
+    finally:
+        edges.unpersist()
+        if labels is not None and not converged:
+            _free_checkpoint(labels)
+    return (all_ids.select(F.col(id_col).alias("id"))
+            .join(labels.withColumnRenamed("node", "id"), "id", "left")
+            .select(F.col("id").alias(id_col),
+                    F.coalesce("label", "id").alias("cluster_id")))
 
 
 def score_quantile_buckets(scored: DataFrame, score_col: str,

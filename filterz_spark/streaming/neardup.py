@@ -90,10 +90,10 @@ def greedy_novel_distributed(sigs: DataFrame, max_rounds: int = 200,
     The frontier shrinks by at least the global-minimum doc per round (in
     practice geometrically: everything outside collision clusters resolves
     in round 1, chains inside a cluster take one round per link).
-    Per-round state is localCheckpointed to cut compounding lineage, same
-    discipline as ops.relational.dedup_components; ALL checkpoint blocks
-    — including the frontier and per-round frames on the non-convergence
-    raise path — are freed in a finally. Raises if ``max_rounds`` rounds
+    Per-round state is localCheckpointed to cut compounding lineage, as
+    ops.relational.dedup_components cuts each of its rounds; the frontier
+    and per-round frames — on the non-convergence raise path too — are
+    unpersisted in a finally. Raises if ``max_rounds`` rounds
     leave docs undecided (a pathological >200-link dependency chain — at
     that depth the corpus needs exact_dedup first, not near-dup).
 

@@ -946,14 +946,25 @@ class TestScaleHardening:
         assert found == 5
 
     def test_dedup_components_raises_on_non_convergence(self, spark):
+        """A raising call leaves no block persisted; a successful one
+        leaves only the returned frame's."""
         from filterz_spark.ops.relational import dedup_components
+
+        def persisted():
+            # ids, not a count: the JVM holds persisted RDDs weakly, so an
+            # unreferenced one from an earlier test may go at any time
+            return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
         # a path graph 0-1-2-...-29 has diameter 29 > max_iters
         ids = spark.range(30).select(F.col("id").alias("doc_id"))
         pairs = spark.createDataFrame(
             [(i, i + 1) for i in range(29)], "doc_a long, doc_b long")
+        before = persisted()
         with pytest.raises(RuntimeError, match="did not converge"):
             dedup_components(pairs, ids, max_iters=3)
+        assert persisted() - before == set()
         ok = dedup_components(pairs, ids, max_iters=40)
+        assert len(persisted() - before) == 1
         assert ok.filter(F.col("cluster_id") != 0).count() == 0
 
     def test_rolling_fingerprints_window_semantics(self, spark):
@@ -987,9 +998,10 @@ class TestScaleHardening:
 
     def test_dedup_components_large_pair_count_no_lineage_blowup(self, spark):
         """VERDICT #8: 10x the sf0.01 candidate-pair count through the
-        iterative propagation must complete with bounded lineage (the
-        localCheckpoint cut) — a star-of-chains graph exercises several
-        rounds over ~230k edges."""
+        iterative propagation must complete with bounded lineage (every
+        round is localCheckpointed) — on this star-of-chains graph over
+        ~230k edges the labels settle in 10 rounds (node 0's distance to
+        the farthest chain end) and an 11th confirms the fixpoint."""
         n_chains, chain_len = 2300, 10  # 230k pairs, diameter 2*chain_len
         ids = spark.range(n_chains * chain_len).select(F.col("id").alias("doc_id"))
         pairs = spark.range(n_chains * chain_len - 1).select(
@@ -1002,6 +1014,105 @@ class TestScaleHardening:
         labels = dedup_components(pairs.unionByName(hub), ids, max_iters=30)
         # every chain hangs off the hub through node 0 -> one component
         assert labels.filter(F.col("cluster_id") != 0).count() == 0
+
+
+def _union_find(ids, pairs):
+    """Driver-side components of the subgraph induced by ``ids``: each id
+    mapped to the smallest id it reaches."""
+    parent = {i: i for i in ids if i is not None}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        if a in parent and b in parent:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+    return {i: find(i) for i in parent}
+
+
+class TestDedupComponents:
+    """``dedup_components`` against a driver-side union-find, its
+    ``max_iters`` contract and the jobs it runs."""
+
+    @staticmethod
+    def _graph(seed):
+        """Several random components over sparse 40-bit ids, plus singleton
+        ids, duplicate/reversed/self pairs, ids listed twice, a null id,
+        and a chain a-b-c whose middle node is not in ``all_ids``."""
+        import random
+        rng = random.Random(seed)
+        nodes = rng.sample(range(1 << 40), 90)
+        ids, pairs = list(nodes), []
+        for start in range(0, 80, 16):
+            comp = nodes[start:start + rng.randint(2, 16)]
+            for i in range(1, len(comp)):
+                # a random tree keeps every component connected
+                pairs.append((comp[i], comp[rng.randrange(i)]))
+            pairs += [tuple(rng.sample(comp, 2)) for _ in range(len(comp) // 3)]
+        pairs += [(b, a) for a, b in rng.sample(pairs, 5)]   # reversed
+        pairs += rng.sample(pairs, 5)                         # duplicate
+        pairs += [(n, n) for n in rng.sample(nodes, 3)]       # self
+        a, b, c = (1 << 41) + 3, (1 << 41) + 1, (1 << 41) + 2
+        pairs += [(a, b), (b, c)]
+        ids += [a, c, nodes[0], nodes[85], None]
+        return ids, pairs
+
+    def test_matches_union_find(self, spark):
+        from collections import Counter
+        from filterz_spark.ops.relational import dedup_components
+        for seed in (1, 2, 3):
+            ids, pairs = self._graph(seed)
+            got = dedup_components(
+                spark.createDataFrame(pairs, "doc_a long, doc_b long"),
+                spark.createDataFrame([(i,) for i in ids], "doc_id long"))
+            assert got.columns == ["doc_id", "cluster_id"]
+            want = _union_find(ids, pairs)
+            # one row per all_ids row: duplicates kept, the null id unlabelled
+            assert Counter(map(tuple, got.collect())) == Counter(
+                (i, want.get(i)) for i in ids), f"seed {seed}"
+            a, c = (1 << 41) + 3, (1 << 41) + 2
+            assert want[a] == a and want[c] == c   # b is not an id: a, c apart
+
+    def test_max_iters_boundary(self, spark):
+        """Labels that settle within ``max_iters`` rounds return: the path
+        0-1-...-29 (diameter 29) succeeds at 29 and raises at 28."""
+        from filterz_spark.ops.relational import dedup_components
+        ids = spark.range(30).select(F.col("id").alias("doc_id"))
+        pairs = spark.createDataFrame(
+            [(i, i + 1) for i in range(29)], "doc_a long, doc_b long")
+        got = dedup_components(pairs, ids, max_iters=29).collect()
+        assert sorted(r["doc_id"] for r in got) == list(range(30))
+        assert {r["cluster_id"] for r in got} == {0}
+        with pytest.raises(RuntimeError, match="did not converge"):
+            dedup_components(pairs, ids, max_iters=28)
+
+    def test_job_count(self, spark):
+        """Exact Spark job count on a diameter-2 graph, counted through
+        the caller's job group, which the operator must leave in place.
+        Three rounds (two that lower a label, one that confirms the
+        fixpoint) run 11 jobs with adaptive execution on, its shuffle map
+        stages included; the pre-rewrite operator ran 60."""
+        from filterz_spark.ops.relational import dedup_components
+        sc = spark.sparkContext
+        pairs = spark.createDataFrame([(1, 2), (2, 3), (10, 11)],
+                                      "doc_a long, doc_b long")
+        ids = spark.createDataFrame([(i,) for i in (1, 2, 3, 10, 11, 20)],
+                                    "doc_id long")
+        group = "test-dedup-components-jobs"
+        sc.setJobGroup(group, "dedup_components job count")
+        try:
+            out = dedup_components(pairs, ids)
+            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            assert sc.getLocalProperty("spark.jobGroup.id") == group
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert jobs == 11
+        assert sorted(map(tuple, out.collect())) == [
+            (1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (20, 20)]
 
 
 class TestHypertableRollup:
