@@ -200,8 +200,12 @@ def run_bench(sf_dir: str, cores: int, parts: int | None = None,
         docs, docs.filter("doc_id % 50 = 0"),
         {"en": 0.7, "zh": 1.0, "fr": 1.0}).count())
 
-    # fold in the two-cluster-size evidence if tools/scaling_bench.py has run
+    # fold in the two-cluster-size evidence if tools/scaling_bench.py has run.
+    # These figures are copied from the file, not measured by this run: the
+    # block says so, with the round and host they were measured on.
     scaling = None
+    carried = {"measured": False, "source_round": 3, "host": "local[32]",
+               "detail": "BENCH/BASELINE.md"}
     baseline_md = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                                "BENCH", "BASELINE.md")
     if os.path.exists(baseline_md):
@@ -224,10 +228,10 @@ def run_bench(sf_dir: str, cores: int, parts: int | None = None,
                     {k: round(payload["local32"]["builds"][k]["sec"] / ref, 2)
                      for k, ref in payload.get("ref_walls_20m", {}).items()}
                     if payload.get("ref_walls_20m") else None),
-                "detail": "BENCH/BASELINE.md",
+                **carried,
             }
         except Exception:
-            scaling = {"detail": "BENCH/BASELINE.md (parse skipped)"}
+            scaling = dict(carried, detail="BENCH/BASELINE.md (parse skipped)")
 
     # round-6 legs stay OUT of the headline sum: rounds 1-5 recorded the
     # headline over the original leg set, and silently growing the sum

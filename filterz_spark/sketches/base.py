@@ -10,12 +10,13 @@ north-rule extensions (HLL, count-min, t-digest, KLL, Bloom) are all
     estimate(...)    — sketch-specific query
     serialize()/deserialize() — stable little-endian byte payload
 
-which is exactly the contract Spark's ``treeAggregate`` / two-level
-``applyInPandas`` aggregation needs: partials build independently per
-partition, merge in any order/tree shape, and (for Bloom/HLL/CMS) produce
-BIT-IDENTICAL state regardless of aggregation order — the property the
-merge-associativity tests gate on. t-digest/KLL are deterministic for a fixed
-merge order and hold their published rank-error bound under any order.
+which is exactly the contract Spark's ``treeAggregate`` / the two-level
+keyed aggregation in ``spark/merge.py`` needs: partials build
+independently per partition, merge in any order/tree shape, and (for
+Bloom/HLL/CMS) produce BIT-IDENTICAL state regardless of aggregation
+order — the property the merge-associativity tests gate on. t-digest/KLL
+are deterministic for a fixed merge order and hold their published
+rank-error bound under any order.
 """
 
 from __future__ import annotations

@@ -2,16 +2,19 @@
 
 Pipeline (SURVEY.md §2.6): per-partition partial states via one
 ``mapInArrow`` pass over the scan (NO shuffle — partials build where the
-data lives, the map-side-combine of a hash aggregate), then a fan-in tree of
-``applyInPandas`` merge rounds over the tiny state rows, then a final driver
-merge of the <= fanin survivors. This is the applyInPandas form of
-``treeAggregate``: at 10^6 partitions and 16KB HLL states, round one moves
-16GB across the cluster in 32-row groups, round two 500MB, etc. — never
-through the driver until the last handful.
+data lives, the map-side-combine of a hash aggregate), then, while more
+than ``fanin`` states remain, keyed merge rounds (``_merge_by``: one
+shuffle of the KB-sized states and one Arrow pass that folds each key's
+states), then a final driver merge of the <= fanin survivors. This is the
+Arrow form of ``treeAggregate``: at 10^6 partitions and 16KB HLL states,
+round one moves 16GB across the cluster in 32-state keys, round two
+500MB, etc. — the driver only ever holds the last handful.
 
-Bloom/HLL/CMS states are bit-identical under any tree shape (monoid with
-idempotent/commutative merge); t-digest/KLL are deterministic for the fixed
-tree shape this module produces, and hold their rank bounds under any shape.
+Every merge — executor round or driver finish — folds states in
+``partition_id`` order, so Bloom/HLL/CMS states are bit-identical under
+any tree shape (monoid with idempotent/commutative merge) and
+t-digest/KLL states are deterministic for a given input partitioning,
+holding their rank bounds under any shape.
 """
 
 from __future__ import annotations
@@ -19,7 +22,6 @@ from __future__ import annotations
 import json
 from typing import Iterator
 
-import pandas as pd
 import pyarrow as pa
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, functions as F
@@ -79,54 +81,66 @@ def partial_states(df: DataFrame, col: str, kind: str, params: dict | None = Non
         STATE_SCHEMA)
 
 
-def _merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    kind = pdf["kind"].iloc[0]
-    sketches = [
-        deserialize_sketch(kind, bytes(p), json.loads(prm))
-        for p, prm in zip(pdf["payload"], pdf["params"])
-    ]
-    acc = sketches[0]
-    for s in sketches[1:]:
-        acc = acc.merge(s)
-    return pd.DataFrame({
-        "partition_id": [int(pdf["partition_id"].min())],
-        "kind": [kind],
-        "params": [json.dumps(acc.params())],
-        "payload": [acc.serialize()],
-    })
+def _fold(rows) -> MergeableSketch | None:
+    """Merge (kind, params, payload) rows in the order given; None if empty."""
+    acc = None
+    for r in rows:
+        s = deserialize_sketch(r["kind"], bytes(r["payload"]), json.loads(r["params"]))
+        acc = s if acc is None else acc.merge(s)
+    return acc
 
 
-def tree_merge(states: DataFrame, fanin: int = 32,
-               num_states_hint: int | None = None) -> MergeableSketch:
-    """Fan-in tree of applyInPandas merge rounds, then a driver-side finish.
+def _merge_by(states: DataFrame, key: str) -> DataFrame:
+    """One state per distinct ``key``: a shuffle of the state rows by key,
+    then one Arrow pass per task that folds each key's states in
+    ``partition_id`` order (so the result does not depend on the order the
+    shuffle delivers them). The output row keeps the key, the smallest
+    ``partition_id`` and every other column's schema."""
 
-    Each round groups ``fanin`` states by partition_id range and merges them
-    in one executor task. The round count is derived from the PARTITION COUNT
-    of the input (one state row per partition) — a metadata lookup, not a
-    job — so the whole merge is a single pass with no count()/recompute.
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        batches = list(batches)
+        if not batches:
+            return
+        tbl = pa.Table.from_batches(batches)
+        rows = sorted(tbl.to_pylist(), key=lambda r: r["partition_id"])
+        groups: dict = {}
+        for r in rows:
+            groups.setdefault(r[key], []).append(r)
+        out = []
+        for members in groups.values():
+            acc = _fold(members)
+            out.append(dict(members[0], params=json.dumps(acc.params()),
+                            payload=acc.serialize()))
+        yield pa.RecordBatch.from_pylist(out, schema=tbl.schema)
+
+    return states.repartition(key).mapInArrow(fn, states.schema)
+
+
+def _reduce(states: DataFrame, fanin: int = 32) -> list:
+    """Keyed merge rounds while more than ``fanin`` states remain, then the
+    survivors collected in ``partition_id`` order (<= fanin KB rows).
+
+    The round count is derived from the PARTITION COUNT of the input (one
+    state row per partition) — a metadata lookup, not a job — so the whole
+    reduction is a single pass with no count()/recompute.
     """
-    if num_states_hint is not None:
-        n = num_states_hint
-    else:
-        try:
-            # JVM-side partition count of the planned query — unlike `.rdd`,
-            # this never builds the python-serialized RDD wrapper (it only
-            # plans, which the merge job would do anyway). Private API: a
-            # Spark version bump may remove it, hence the public fallback.
-            n = states._jdf.queryExecution().toRdd().getNumPartitions()
-        except Exception:
-            n = states.rdd.getNumPartitions()
+    try:
+        # JVM-side partition count of the planned query — unlike `.rdd`,
+        # this never builds the python-serialized RDD wrapper (it only
+        # plans, which the merge job would do anyway). Private API: a
+        # Spark version bump may remove it, hence the public fallback.
+        n = states._jdf.queryExecution().toRdd().getNumPartitions()
+    except Exception:
+        n = states.rdd.getNumPartitions()
     cur = states
     divisor = fanin
     while n > fanin:
         # group ids stay aligned with the ORIGINAL partition_id (each round's
         # output row keeps min(partition_id) of its group, so round r groups
         # by pid // fanin^r)
-        cur = (
-            cur.withColumn("g", F.floor(F.col("partition_id") / divisor))
-            .groupBy("g")
-            .applyInPandas(lambda pdf: _merge_group(pdf.drop(columns=["g"])), STATE_SCHEMA)
-        )
+        cur = _merge_by(
+            cur.withColumn("g", F.floor(F.col("partition_id") / divisor)),
+            "g").drop("g")
         n = (n + fanin - 1) // fanin
         divisor *= fanin
     # collect unordered and sort driver-side: an ``orderBy`` here plans a
@@ -134,16 +148,19 @@ def tree_merge(states: DataFrame, fanin: int = 32,
     # partials pipeline a second time (measured 2.3x wall on the sketch
     # legs); the surviving rows are <= fanin KB-sized states, so the
     # driver sort is free and the merge order is identical
-    rows = sorted(cur.collect(), key=lambda r: r["partition_id"])
-    if not rows:
+    return sorted(cur.collect(), key=lambda r: r["partition_id"])
+
+
+def tree_merge(states: DataFrame, fanin: int = 32) -> MergeableSketch:
+    """Fan-in tree of keyed merge rounds, then a driver-side finish.
+
+    Each round keys ``fanin`` states by partition_id range and merges them
+    in one executor task (``_merge_by``); the driver merges the <= fanin
+    survivors. Raises ``ValueError`` on an input without states.
+    """
+    acc = _fold(_reduce(states, fanin))
+    if acc is None:
         raise ValueError("no sketch states to merge (empty input)")
-    sketches = [
-        deserialize_sketch(r["kind"], bytes(r["payload"]), json.loads(r["params"]))
-        for r in rows
-    ]
-    acc = sketches[0]
-    for s in sketches[1:]:
-        acc = acc.merge(s)
     return acc
 
 
@@ -162,12 +179,12 @@ def grouped_sketch_states(df: DataFrame, group_col: str, value_col: str,
 
     Two-phase: per-(partition, group) partials inside one mapInArrow pass
     (map-side combine — the hot group's rows never concentrate), then one
-    shuffle of tiny states grouped by key and an applyInPandas merge. Output:
-    (group, kind, params, payload) — feed rows to ``deserialize_sketch`` or
-    ``grouped_estimates``.
+    shuffle of tiny states by key and one Arrow merge pass (``_merge_by``,
+    states folded in partition order, so every kind is deterministic for a
+    given input partitioning). Output: (group, kind, params, payload) —
+    feed rows to ``deserialize_sketch`` or ``grouped_estimates``.
     """
     import numpy as np
-    import pandas as pd  # noqa: F401 (executor side)
 
     params = params or {}
     if value_kind is None:
@@ -214,33 +231,23 @@ def grouped_sketch_states(df: DataFrame, group_col: str, value_col: str,
                     sk = SKETCH_KINDS[kind].zero(**params)
                     sketches[g] = sk
                 sk.update(svs[s:e])
-        state_schema = pa.schema([
-            ("g", pa.string()), ("kind", pa.string()),
-            ("params", pa.string()), ("payload", pa.binary()),
-        ])
-        for g, sk in sketches.items():
-            yield pa.RecordBatch.from_pydict({
-                "g": [g], "kind": [kind],
-                "params": [json.dumps(sk.params())],
-                "payload": [sk.serialize()],
-            }, schema=state_schema)
+        if not sketches:
+            return
+        pid = TaskContext.get().partitionId()
+        yield pa.RecordBatch.from_pydict({
+            "g": list(sketches), "partition_id": [pid] * len(sketches),
+            "kind": [kind] * len(sketches),
+            "params": [json.dumps(sk.params()) for sk in sketches.values()],
+            "payload": [sk.serialize() for sk in sketches.values()],
+        }, schema=pa.schema([
+            ("g", pa.string()), ("partition_id", pa.int64()),
+            ("kind", pa.string()), ("params", pa.string()),
+            ("payload", pa.binary()),
+        ]))
 
     partials = projected.mapInArrow(
-        partial_fn, "g string, kind string, params string, payload binary")
-
-    def merge_group_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = None
-        for p, prm in zip(pdf["payload"], pdf["params"]):
-            s = deserialize_sketch(kind, bytes(p), json.loads(prm))
-            acc = s if acc is None else acc.merge(s)
-        return pd.DataFrame({
-            "g": [pdf["g"].iloc[0]], "kind": [kind],
-            "params": [json.dumps(acc.params())],
-            "payload": [acc.serialize()],
-        })
-
-    return partials.groupBy("g").applyInPandas(
-        merge_group_fn, "g string, kind string, params string, payload binary")
+        partial_fn, "g string, " + STATE_SCHEMA)
+    return _merge_by(partials, "g").select("g", "kind", "params", "payload")
 
 
 def grouped_estimates(states_df: DataFrame) -> list[tuple]:

@@ -18,22 +18,24 @@ build-once / probe-many shape to the mergeable-sketch tier the north
 rule adds.
 
 Scale shape per epoch write: one map-side pass builds per-partition
-partials where the data lives (no shuffle of raw rows), then fan-in
-``applyInPandas`` rounds reduce them to ``states_per_epoch`` rows (KB
-each) ENTIRELY on executors — the store write never routes payloads
-through the driver. Merging a range reads only the requested epoch
-partitions (partition-pruned scan over KB files) and tree-merges them.
+partials where the data lives (no shuffle of raw rows); they are reduced
+as in ``merge.tree_merge`` (executor fan-in rounds while more than 32
+states remain, so the driver receives at most 32 KB-sized states), and
+the driver folds them into the epoch's one state and writes that row.
+Merging a range reads only the requested epoch partitions
+(partition-pruned scan over KB files) and merges them on the driver.
 """
 
 from __future__ import annotations
 
 import json
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..sketches import SKETCH_KINDS, MergeableSketch
 from . import manifest
-from .merge import STATE_SCHEMA, _merge_group, partial_states, tree_merge
+from .merge import STATE_SCHEMA, _fold, _reduce, partial_states
 
 SKETCHSTORE_META_DIR = "_filterz_sketch_meta"
 # store rows add the epoch partition column to the merge-state schema
@@ -77,21 +79,20 @@ def _resolve_value_kind(kind: str, value_kind: str | None) -> str:
 def write_sketch_epoch(df: DataFrame, col: str, path: str, epoch: str, *,
                        kind: str, params: dict | None = None,
                        value_kind: str | None = None,
-                       states_per_epoch: int = 1,
-                       fanin: int = 32,
                        merge_existing: bool = False) -> None:
-    """Reduce one epoch of raw rows to persisted sketch states.
+    """Reduce one epoch of raw rows to one persisted sketch state.
 
     Overwrites ONLY this epoch's partition (dynamic partition overwrite),
     so re-running a failed/changed day replaces that day and nothing
-    else — the write is idempotent per (path, epoch).
+    else — the write is idempotent per (path, epoch). An epoch without
+    rows writes nothing and leaves any stored state of the epoch as it is.
 
     ``merge_existing=True`` is the INCREMENTAL mode (streaming
     foreachBatch appending micro-batches into the current day, or late
     data trickling into a closed day): the epoch's existing states are
-    folded in as extra partials before the reduction, so the rewritten
-    partition equals old-state ⊔ new-rows. Replace semantics (the
-    default) are for recomputing a day from scratch. NOTE the two modes'
+    folded in on the driver, so the rewritten partition equals
+    old-state ⊔ new-rows. Replace semantics (the default) are for
+    recomputing a day from scratch. NOTE the two modes'
     replay stories differ: replace is idempotent per (path, epoch);
     merge_existing composes monotonically, so EXACT re-delivery of the
     same rows is only a no-op for idempotent-merge sketches (HLL/Bloom
@@ -99,15 +100,13 @@ def write_sketch_epoch(df: DataFrame, col: str, path: str, epoch: str, *,
     replayed batch, same as any at-least-once counter; guard those with
     the caller's batch-id watermark (streaming/windowed.py discipline).
 
-    The reduction is fully distributed: per-partition partials
-    (``partial_states``: one mapInArrow pass, no shuffle of raw rows),
-    then fan-in merge rounds down to ``states_per_epoch`` rows. The only
-    driver traffic is ``merge_existing`` lifting the epoch's CURRENT
-    states — at most ``states_per_epoch`` KB-sized rows by construction
-    (never data-sized), required because Spark cannot overwrite a
-    partition it is concurrently scanning. ``states_per_epoch > 1``
-    keeps residual parallelism for enormous epochs; the default 1 makes
-    range merges read exactly one KB-sized row per epoch.
+    The raw rows never leave the executors: per-partition partials
+    (``partial_states``: one mapInArrow pass, no shuffle of raw rows)
+    are reduced by executor fan-in rounds while more than 32 remain, so
+    the driver receives at most 32 KB-sized states, plus the epoch's
+    stored states under ``merge_existing``. It merges them and writes the
+    one state row: two jobs for an input of at most 32 partitions
+    (collect, write), one more for the ``merge_existing`` read.
     """
     if kind not in SKETCH_KINDS:
         raise ValueError(f"unknown sketch kind {kind!r}: {sorted(SKETCH_KINDS)}")
@@ -131,52 +130,25 @@ def write_sketch_epoch(df: DataFrame, col: str, path: str, epoch: str, *,
         # that the retry accepts, never data without a marker
         _stamp(spark, path, kind, params, value_kind)
 
-    states = partial_states(df, col, kind, params, value_kind)
-    prior_used = False
+    rows = _reduce(partial_states(df, col, kind, params, value_kind))
+    if not rows:  # no input rows: nothing to write, the stored epoch stays
+        return
     if merge_existing and meta is not None:
-        # lift the epoch's current states off the partition about to be
-        # overwritten (<= states_per_epoch KB rows — bounded by the
-        # constant, never by data size)
-        prior = spark.read.schema(STORE_SCHEMA).parquet(path) \
-            .where(F.col("epoch") == str(epoch)) \
-            .select("partition_id", "kind", "params", "payload").collect()
-        if prior:
-            states = states.unionByName(
-                spark.createDataFrame(prior, STATE_SCHEMA))
-            prior_used = True
-    # executor-side fan-in reduction to `states_per_epoch` rows. Round
-    # count is derived from the df partition count (metadata, no job).
-    try:
-        n = states._jdf.queryExecution().toRdd().getNumPartitions()
-    except Exception:
-        n = states.rdd.getNumPartitions()
-    cur, divisor = states, fanin
-    reduced = False
-    while n > max(states_per_epoch, 1) * fanin:
-        cur = (cur.withColumn("g", F.floor(F.col("partition_id") / divisor))
-               .groupBy("g")
-               .applyInPandas(lambda pdf: _merge_group(pdf.drop(columns=["g"])),
-                              STATE_SCHEMA))
-        n = (n + fanin - 1) // fanin
-        divisor *= fanin
-        reduced = True
-    if not reduced and not prior_used and n <= max(states_per_epoch, 1):
-        # already <= states_per_epoch partials with contiguous ids 0..n-1:
-        # pmod(pid, s) is the identity here, so the final merge round would
-        # shuffle each row into its own 1-row group just to re-serialize it.
-        # Skipping it saves a shuffle + Python stage PER EPOCH (the epoch
-        # write loop's floor at small scale); any prior-state union or
-        # fan-in round keeps the merging path.
-        final = cur
-    else:
-        final = (cur.withColumn("g", F.pmod(F.col("partition_id"),
-                                            F.lit(max(states_per_epoch, 1))))
-                 .groupBy("g")
-                 .applyInPandas(
-                     lambda pdf: _merge_group(pdf.drop(columns=["g"])
-                                              .assign(partition_id=pdf["g"])),
-                     STATE_SCHEMA))
-    out = final.withColumn("epoch", F.lit(str(epoch)))
+        # stores written with several states per epoch hold more than one
+        rows += sorted(
+            spark.read.schema(STORE_SCHEMA).parquet(path)
+            .where(F.col("epoch") == str(epoch))
+            .select("partition_id", "kind", "params", "payload").collect(),
+            key=lambda r: r["partition_id"])
+    sketch = _fold(rows)
+    # an Arrow table is the cheapest one-row source to plan and write
+    out = spark.createDataFrame(pa.table({
+        "partition_id": pa.array([0], pa.int64()),
+        "kind": [kind],
+        "params": [json.dumps(sketch.params())],
+        "payload": pa.array([sketch.serialize()], pa.binary()),
+        "epoch": [str(epoch)],
+    }))
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
@@ -211,19 +183,18 @@ def read_sketch_store(spark: SparkSession, path: str, *,
 def merge_sketch_range(spark: SparkSession, path: str, *,
                        epoch_min: str | None = None,
                        epoch_max: str | None = None,
-                       epochs: list[str] | None = None,
-                       fanin: int = 32) -> MergeableSketch:
+                       epochs: list[str] | None = None) -> MergeableSketch:
     """Merge the stored states of an epoch range into one sketch.
 
     The scan touches ONLY the requested epoch partitions (Hive-style
     partition pruning on the `epoch` directory column — gated by
-    tests/test_plans.py). The states are re-keyed to contiguous
-    partition_ids (a single tiny shuffle over KB rows) and handed to
-    ``tree_merge``; with the default one state per epoch, a 90-day range
-    is 90 KB-sized rows — the merge is driver-trivial by construction,
-    which is the entire point of the store.
+    tests/test_sketch_store.py). One job collects the pruned states and
+    the driver merges them in (epoch, partition_id) order, so every kind
+    merges to the same bytes however the epochs were written. Driver
+    memory holds the range's states: one per epoch (~16 KB for an HLL at
+    p=14, so a 90-day range is ~1.4 MB). Raises ``ValueError`` if the
+    range holds no states.
     """
-    from pyspark.sql import Window
     states = read_sketch_store(spark, path)
     if epochs is not None:
         states = states.where(F.col("epoch").isin([str(e) for e in epochs]))
@@ -231,15 +202,10 @@ def merge_sketch_range(spark: SparkSession, path: str, *,
         states = states.where(F.col("epoch") >= str(epoch_min))
     if epoch_max is not None:
         states = states.where(F.col("epoch") <= str(epoch_max))
-    # contiguous ids so tree_merge's fan-in grouping reduces every round
-    # (store rows reuse partition_id 0..states_per_epoch-1 across epochs)
-    w = Window.orderBy("epoch", "partition_id")
-    rekeyed = (states.withColumn("partition_id",
-                                 F.row_number().over(w) - F.lit(1))
-               .select("partition_id", "kind", "params", "payload"))
-    n_rows = rekeyed.count()  # KB-sized frame; also the empty-range guard
-    if n_rows == 0:
+    rows = sorted(states.collect(),
+                  key=lambda r: (r["epoch"], r["partition_id"]))
+    if not rows:
         raise ValueError(
             f"sketch store at {path} has no states in the requested epoch "
             "range")
-    return tree_merge(rekeyed, fanin=fanin, num_states_hint=n_rows)
+    return _fold(rows)

@@ -52,6 +52,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..ops.dedup import minhash_signature_arrays
+from ..ops.relational import _free_checkpoint
 from ..spark import manifest
 
 STORE_SCHEMA = "doc_id long, band int, minhash string"
@@ -92,10 +93,11 @@ def greedy_novel_distributed(sigs: DataFrame, max_rounds: int = 200,
     in round 1, chains inside a cluster take one round per link).
     Per-round state is localCheckpointed to cut compounding lineage, as
     ops.relational.dedup_components cuts each of its rounds; the frontier
-    and per-round frames — on the non-convergence raise path too — are
-    unpersisted in a finally. Raises if ``max_rounds`` rounds
-    leave docs undecided (a pathological >200-link dependency chain — at
-    that depth the corpus needs exact_dedup first, not near-dup).
+    and per-round checkpoints — on the non-convergence raise path too — are
+    freed in a finally, so only the returned frame stays persisted. Raises
+    if ``max_rounds`` rounds leave docs undecided (a pathological
+    >200-link dependency chain — at that depth the corpus needs
+    exact_dedup first, not near-dup).
 
     ``driver_finish_rows``: everything outside collision clusters resolves
     in round 1, so the later rounds iterate a TINY frontier through
@@ -113,7 +115,7 @@ def greedy_novel_distributed(sigs: DataFrame, max_rounds: int = 200,
            .localCheckpoint(eager=True))
     spark = sigs.sparkSession
     kept_all = spark.createDataFrame([], "doc_id long")
-    rounds: list = []
+    checkpoints: list = [und]
     n_und = und.count()
     try:
         for _ in range(max_rounds):
@@ -162,7 +164,7 @@ def greedy_novel_distributed(sigs: DataFrame, max_rounds: int = 200,
                            .when(F.col("any_mn_kept") == 1, F.lit("rejected"))
                            .otherwise(F.lit("undecided")).alias("status"))
                    .localCheckpoint(eager=True))
-            rounds.append(rnd)
+            checkpoints.append(rnd)
             kept_all = kept_all.unionByName(
                 rnd.filter("status = 'kept'").select("doc_id").distinct())
             nxt = rnd.filter("status = 'undecided'") \
@@ -170,7 +172,6 @@ def greedy_novel_distributed(sigs: DataFrame, max_rounds: int = 200,
             # emptiness probe over the already-checkpointed round result —
             # a narrow scan, not a recompute and not an extra shuffle
             n_und = nxt.count()
-            und.unpersist()
             und = nxt
         raise RuntimeError(
             f"greedy_novel_distributed did not converge in {max_rounds} "
@@ -179,9 +180,10 @@ def greedy_novel_distributed(sigs: DataFrame, max_rounds: int = 200,
             "max_rounds, or exact-dedup the batch first to collapse the "
             "chain.")
     finally:
-        und.unpersist()
-        for r in rounds:
-            r.unpersist()
+        # the returned frame is its own eager checkpoint; ``unpersist``
+        # frees nothing on a localCheckpoint frame
+        for c in checkpoints:
+            _free_checkpoint(c)
 
 
 def greedy_novel(sig_rows: list, seen_buckets: set) -> list:

@@ -71,3 +71,29 @@ def session_checkpoint_dir(spark, path):
         yield
     finally:
         set_dir(old)
+
+
+def run_in_job_group(spark, group, fn):
+    """Run ``fn()`` under the job group ``group`` and return
+    ``(result, n_jobs, plans)``: the number of Spark jobs the call ran and
+    the physical plan text of every SQL execution those jobs belong to.
+    The call must leave the caller's job group in place."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+        jobs = set(sc.statusTracker().getJobIdsForGroup(group))
+        assert sc.getLocalProperty("spark.jobGroup.id") == group
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    plans = []
+    execs = spark._jsparkSession.sharedState().statusStore() \
+        .executionsList().iterator()
+    while execs.hasNext():
+        e = execs.next()
+        ids, mine = e.jobs().keys().iterator(), False
+        while ids.hasNext():
+            mine |= int(ids.next()) in jobs
+        if mine:
+            plans.append(e.physicalPlanDescription())
+    return out, len(jobs), plans

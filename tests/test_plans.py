@@ -117,10 +117,9 @@ def test_lsh_candidate_pairs_single_signature_pass(spark):
     from filterz_spark.ops.dedup import lsh_candidate_pairs
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     n_scans = lambda p: p.count("documents.parquet")  # noqa: E731
-    # default (group strategy): no self-join exists, so the corpus is read
-    # exactly ONCE with no materialization needed — the checkpoint is
-    # skipped as pure cost — and the bucket cap (a size() filter on the
-    # aggregated row) must not add scans
+    # the bucket expansion has no self-join, so the corpus is read exactly
+    # ONCE with nothing materialized, and the bucket cap (a size() filter
+    # on the aggregated row) must not add scans
     capped = plan(lsh_candidate_pairs(docs, 8, 2, max_bucket_size=10_000))
     uncapped = plan(lsh_candidate_pairs(docs, 8, 2, max_bucket_size=None))
     assert n_scans(capped) == 1, (n_scans(capped), capped[:500])

@@ -7,7 +7,9 @@
 - quantile kinds (t-digest) hold their rank bounds through the store;
 - per-epoch re-writes are idempotent (dynamic partition overwrite);
 - the marker refuses mismatched params / kinds / unmarked directories;
-- the range scan is partition-pruned on the epoch directory column.
+- the range scan is partition-pruned on the epoch directory column;
+- an epoch write runs two jobs and a range merge one, with no pandas
+  group merge; quantile range merges repeat byte for byte.
 """
 
 import shutil
@@ -16,7 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from filterz_spark.sources.pages import synth_pages
-from filterz_spark.spark.merge import sketch_column
+from filterz_spark.spark.merge import partial_states, sketch_column
 from filterz_spark.spark.sketch_store import (merge_sketch_range,
                                               read_sketch_store,
                                               write_sketch_epoch)
@@ -200,3 +202,86 @@ class TestPlan:
         # listing), not as a post-scan Filter over all partitions
         pf = plan.split("PartitionFilters:", 1)[1].split("]", 1)[0]
         assert EPOCHS[0] in pf or "epoch" in pf, pf
+
+
+class TestDriverMerge:
+    def test_job_counts_and_no_pandas_merge(self, spark, pages, store):
+        """An epoch write is one collect of the reduced partials plus one
+        one-row write, a first write and a rewrite alike; a range merge
+        is one collect. Counted under the caller's job group."""
+        from conftest import run_in_job_group
+        day = pages.where(F.col("epoch") == EPOCHS[0])
+        for i in range(2):
+            _, jobs, plans = run_in_job_group(
+                spark, f"test-sketch-store-write-{i}",
+                lambda: write_sketch_epoch(day, "url", store, EPOCHS[0],
+                                           kind="hll", params={"p": 12}))
+            assert jobs == 2
+            assert len(plans) == 2
+            assert not any("FlatMapGroupsInPandas" in p for p in plans)
+        merged, jobs, _ = run_in_job_group(
+            spark, "test-sketch-store-range",
+            lambda: merge_sketch_range(spark, store))
+        assert jobs == 1
+        assert merged.serialize() == \
+            sketch_column(day, "url", "hll", {"p": 12}).serialize()
+
+    @pytest.mark.parametrize("kind,params", [("tdigest", {"delta": 200}),
+                                             ("kll", {"k": 200})])
+    def test_quantile_range_merge_repeats(self, spark, pages, store,
+                                          kind, params):
+        """Order-sensitive kinds merge to the same bytes on every call and
+        after the epochs are rewritten in another order."""
+        ntok = pages.withColumn(
+            "ntok", F.size(F.split("text", " ")).cast("double"))
+
+        def write(order):
+            for e in order:
+                write_sketch_epoch(ntok.where(F.col("epoch") == e), "ntok",
+                                   store, e, kind=kind, params=params)
+
+        write(EPOCHS)
+        first = merge_sketch_range(spark, store).serialize()
+        assert merge_sketch_range(spark, store).serialize() == first
+        write([EPOCHS[2], EPOCHS[0], EPOCHS[1]])
+        assert merge_sketch_range(spark, store).serialize() == first
+
+    def test_empty_write_keeps_epoch(self, spark, pages, store):
+        day = pages.where(F.col("epoch") == EPOCHS[0])
+        write_sketch_epoch(day, "url", store, EPOCHS[0],
+                           kind="hll", params={"p": 12})
+        before = merge_sketch_range(spark, store).serialize()
+        empty = pages.where(F.col("url") == "no such url")
+        for merge_existing in (False, True):
+            for e in EPOCHS[:2]:
+                write_sketch_epoch(empty, "url", store, e, kind="hll",
+                                   params={"p": 12},
+                                   merge_existing=merge_existing)
+        assert merge_sketch_range(spark, store).serialize() == before
+        assert [r["epoch"] for r in
+                read_sketch_store(spark, store).collect()] == [EPOCHS[0]]
+
+    def test_two_states_per_epoch_store(self, spark, pages, store):
+        """Stores written with two states per epoch (rows with
+        partition_id 0 and 1 in each epoch directory) still merge, and an
+        incremental write folds both into one."""
+        write_sketch_epoch(pages.where(F.col("epoch") == EPOCHS[0]), "url",
+                           store, EPOCHS[0], kind="hll", params={"p": 12})
+        for e in EPOCHS[1:]:
+            day = pages.where(F.col("epoch") == e).repartition(2, "url")
+            partial_states(day, "url", "hll", {"p": 12}) \
+                .withColumn("epoch", F.lit(e)) \
+                .write.mode("append").partitionBy("epoch").parquet(store)
+
+        def n_states(e):
+            return read_sketch_store(spark, store) \
+                .where(F.col("epoch") == e).count()
+
+        assert n_states(EPOCHS[1]) == 2
+        whole = sketch_column(pages, "url", "hll", {"p": 12}).serialize()
+        assert merge_sketch_range(spark, store).serialize() == whole
+        write_sketch_epoch(pages.where(F.col("epoch") == EPOCHS[1]), "url",
+                           store, EPOCHS[1], kind="hll", params={"p": 12},
+                           merge_existing=True)
+        assert n_states(EPOCHS[1]) == 1
+        assert merge_sketch_range(spark, store).serialize() == whole

@@ -176,6 +176,33 @@ class TestSketchAggregation:
             many = tree_merge(partial_states(pages.repartition(16), "url", kind, params))
             assert few.serialize() == many.serialize(), kind
 
+    def test_tree_merge_keyed_round(self, spark):
+        """40 input partitions exceed the fan-in of 32, so one keyed Arrow
+        round runs before the driver finish: HLL/CMS/Bloom states equal a
+        2-partition merge bit for bit, KLL/t-digest repeat exactly."""
+        from conftest import run_in_job_group
+
+        def merged(parts, col, kind, params, group):
+            df = spark.range(0, 40_000, numPartitions=parts).select(
+                F.col("id").cast("string").alias("k"),
+                (F.col("id") * 7919 % 40_000 / 7.0).alias("v"))
+            sk, _, plans = run_in_job_group(
+                spark, group,
+                lambda: tree_merge(partial_states(df, col, kind, params)))
+            keyed = any("MapInArrow" in p and "REPARTITION_BY_COL" in p
+                        for p in plans)
+            assert keyed == (parts > 32), group
+            return sk.serialize()
+
+        for kind, params in [("hll", {"p": 12}),
+                             ("cms", {"depth": 4, "width": 2048}),
+                             ("bloom", {"capacity": 40_000, "bits_per_key": 16})]:
+            assert merged(40, "k", kind, params, f"test-tree-40-{kind}") == \
+                merged(2, "k", kind, params, f"test-tree-2-{kind}"), kind
+        for kind, params in [("kll", {"k": 200}), ("tdigest", {"delta": 200})]:
+            assert merged(40, "v", kind, params, f"test-tree-40-{kind}-a") == \
+                merged(40, "v", kind, params, f"test-tree-40-{kind}-b"), kind
+
     def test_cms_lang_counts_exact_side(self, spark, pages):
         s = sketch_column(pages, "lang", "cms", {"depth": 5, "width": 8192})
         truth = {r["lang"]: r["cnt"] for r in
@@ -346,6 +373,20 @@ class TestGroupedSketches:
             n = pages.filter(F.col("lang") == g).select("url").distinct().count()
             if n <= (1 << 14) >> 4:  # clearly-small group stays sparse
                 assert sk.is_sparse and len(bytes(r["payload"])) < (1 << 14), g
+
+    def test_merge_is_one_arrow_pass(self, spark, pages):
+        """The per-group merge is one shuffle of the partial states and one
+        Arrow pass, never a pandas group-apply."""
+        from filterz_spark.spark.merge import grouped_sketch_states
+        from conftest import run_in_job_group
+        rows, _, plans = run_in_job_group(
+            spark, "test-grouped-arrow-merge",
+            lambda: grouped_sketch_states(pages, "lang", "url", "hll",
+                                          {"p": 10}).collect())
+        assert len(plans) == 1
+        assert "FlatMapGroupsInPandas" not in plans[0], plans[0]
+        assert "REPARTITION_BY_COL" in plans[0], plans[0]
+        assert len(rows) == pages.select("lang").distinct().count()
 
     def test_states_partition_independent(self, spark, pages):
         from filterz_spark.spark.merge import grouped_sketch_states

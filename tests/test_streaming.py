@@ -488,8 +488,17 @@ def test_streaming_neardup_rejects_unknown_within_batch():
 
 def test_greedy_novel_distributed_nonconvergence_raises(spark):
     """A dependency chain longer than max_rounds must raise loudly (every
-    round resolves at least one link), never return a partial novel set."""
+    round resolves at least one link), never return a partial novel set.
+    A raising call leaves no block persisted; a successful one leaves only
+    the returned frame's."""
+    from filterz_spark.ops.relational import _free_checkpoint
     from filterz_spark.streaming.neardup import greedy_novel_distributed
+
+    def persisted():
+        # ids, not a count: the JVM holds persisted RDDs weakly, so an
+        # unreferenced one from an earlier test may go at any time
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
     rows = []
     for i in range(12):
         sig = [None, None]
@@ -499,8 +508,17 @@ def test_greedy_novel_distributed_nonconvergence_raises(spark):
     sigs = spark.createDataFrame(rows, "doc_id long, sig array<string>")
     # driver_finish_rows=0: the strictly-distributed path is the one that
     # can fail to converge (the driver finish would just complete the chain)
+    before = persisted()
     with pytest.raises(RuntimeError, match="did not converge"):
         greedy_novel_distributed(sigs, max_rounds=3, driver_finish_rows=0)
+    assert persisted() - before == set()
+    for finish_rows in (0, 6):  # to convergence; driver finish mid-chain
+        kept = greedy_novel_distributed(sigs, driver_finish_rows=finish_rows)
+        assert len(persisted() - before) == 1, finish_rows
+        assert sorted(r["doc_id"] for r in kept.collect()) == \
+            list(range(0, 12, 2))
+        _free_checkpoint(kept)
+
 
 def test_streaming_neardup_out_is_batch_partitioned_and_replay_scoped(spark):
     """Round-6 emit-guard contract: novel output is PARTITIONED by
